@@ -304,8 +304,8 @@ def q_dedup_incremental(spark, sf_dir):
 def q_dedup_minhash_incremental(spark, sf_dir):
     """NEAR-dup twin of dedup_incremental (same doc_id%10 batch split):
     new-crawl docs LSH-matched against corpus + earlier-batch docs
-    (dedup.minhash_lsh_incremental — corpus side semi-joined to touched
-    buckets, so cost scales with |batch|). hash_impl='md5' upgrades it
+    (dedup.minhash_lsh_incremental — only buckets holding a new doc
+    emit pairs, so candidate volume scales with |batch|). hash_impl='md5' upgrades it
     to a FULL value-hash oracle, same mirroring as dedup_minhash_lsh."""
     docs = load_tables(spark, sf_dir)["documents"]
     corpus = docs.where(F.col("doc_id") % 10 < 8)
@@ -4319,11 +4319,11 @@ def _minhash_incremental_oracle_sql(threshold: float = 0.5) -> str:
     over the doc_id%10 batch split: signatures for ALL docs (a doc's
     signature depends only on its own shingles, so computing per-split
     or globally is identical), banding on raw signature slices, the
-    touched-bucket semi-join, the 10k cap over the touched union, the
-    (corpus OR earlier-in-batch) pair rule, and the exact-Jaccard
-    verify. Spark restricts corpus shingling to verify candidates —
-    a pure pruning step, so the global ``sh`` here yields the same
-    joined values."""
+    touched-bucket restriction (a semi-join here; Spark keeps buckets
+    whose member list holds a new doc), the 10k cap over each kept
+    bucket, the (corpus OR earlier-in-batch) pair rule, and the exact-Jaccard
+    verify. The index-less Spark form also builds every doc's shingle
+    set, as the global ``sh`` here does."""
     p = dedup.MERSENNE_P
     coeffs = dedup._perm_coeffs(dedup.N_PERM, seed=42)
     mins = ",\n                     ".join(

@@ -8,10 +8,14 @@ map-side partial aggregation. No Python UDFs anywhere in this module.
 
 Scale notes (100TB of documents):
 - exact: one shuffle on a 128-bit content hash; skew-free by construction.
-- MinHash-LSH: cost is |shingles| for signatures (one shuffle on doc_id),
-  then |docs| x bands for bucketing. Banding keeps the candidate self-join
-  quadratic only within a bucket — the whole point of LSH. Giant buckets
-  (degenerate content) are capped via a per-bucket size guard.
+- MinHash-LSH: cost is |shingles| for signatures and for the verify's
+  shingle sets (one shuffle on doc_id each), then |docs| x bands rows
+  into ONE (band, bucket) aggregate that collects each bucket's
+  members. Pairs are exploded from those lists, so work is quadratic
+  only within a bucket — the whole point of LSH. Giant buckets
+  (degenerate content) are capped by list size. Signatures, bucket
+  lists and candidate pairs each have one consumer, so none is
+  computed twice; nothing is cached.
 - SimHash: 32x bit-explode before the (doc, bit) aggregate; partial agg
   collapses it map-side to 32 rows per doc.
 """
@@ -30,6 +34,7 @@ from ..functions.text import round_half_up, token_hash32, tokens
 MERSENNE_P = (1 << 31) - 1
 N_PERM = 64
 LSH_BANDS = 16  # 16 bands x 4 rows: ~50% candidate recall at jaccard 0.5
+_BUCKET_CAP = 10000  # LSH buckets with more members emit no pairs
 
 
 def _perm_coeffs(n_perm: int = N_PERM, seed: int = 42) -> list[tuple[int, int]]:
@@ -90,17 +95,21 @@ def word_shingles(
     ``carry``: extra per-doc columns preserved through the explode (e.g.
     a batch-membership flag) — lets one shingle pass feed consumers that
     need doc metadata without a |docs|-sized join back."""
-    nt = F.regexp_replace(normalized_text(text), r"\s+", " ")
-    toks = tokens(nt)
-    pat = r"(?=(" + " ".join([r"\S+"] * n) + r"))\S+"
-    grams = F.when(
-        F.size(toks) >= n, F.regexp_extract_all(nt, F.lit(pat), 1)
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    # docs shorter than n tokens produce their whole text as one shingle
-    out = docs.select("doc_id", *carry, F.explode(grams).alias("shingle")).where(
+    out = docs.select("doc_id", *carry, F.explode(_grams(text, n)).alias("shingle")).where(
         F.col("shingle") != ""
     )
     return out.distinct() if distinct else out
+
+
+def _grams(text: str, n: int):
+    """The array of a doc's word n-grams (see ``word_shingles``); docs
+    shorter than n tokens produce their whole text as one gram."""
+    nt = F.regexp_replace(normalized_text(text), r"\s+", " ")
+    toks = tokens(nt)
+    pat = r"(?=(" + " ".join([r"\S+"] * n) + r"))\S+"
+    return F.when(
+        F.size(toks) >= n, F.regexp_extract_all(nt, F.lit(pat), 1)
+    ).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
 def ngram_jaccard_pairs(
@@ -229,6 +238,91 @@ def _banded(
     )
 
 
+def _lsh_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct (new_id, dup_of) candidate pairs from (doc_id, is_new,
+    band, bucket) rows — the banding back end shared by
+    ``minhash_lsh_pairs`` (every doc new) and both forms of
+    ``minhash_lsh_incremental``.
+
+    ONE aggregate per (band, bucket) collects the bucket's members: the
+    degenerate-bucket cap (identical boilerplate content at scale) is
+    the list's size, buckets without a new doc drop out, and pairs are
+    exploded from the list. A pair is a new doc plus a bucket mate that
+    is either old or an earlier new doc (dup_of < new_id) — first-in-
+    batch keeps precedence, ``incremental_dedup``'s keeper rule; with
+    every doc new this is the a < b self-join. The banded relation has
+    this single consumer: Catalyst has no cross-branch CSE, so a second
+    reader (a bucket-size join, a self-join side) would recompute the
+    signature aggregate."""
+    o, n = F.col("o"), F.col("n")
+    return (
+        banded.groupBy("band", "bucket")
+        .agg(F.collect_list(F.struct("doc_id", "is_new")).alias("m"))
+        .where((F.size("m") >= 2) & (F.size("m") <= _BUCKET_CAP))
+        .where(F.exists("m", lambda d: d["is_new"]))
+        .select(F.explode("m").alias("o"), F.filter("m", lambda d: d["is_new"]).alias("ns"))
+        .select("o", F.explode("ns").alias("n"))
+        .where((~o["is_new"] | (o["doc_id"] < n["doc_id"])) & (o["doc_id"] != n["doc_id"]))
+        .select(n["doc_id"].alias("new_id"), o["doc_id"].alias("dup_of"))
+        .distinct()
+    )
+
+
+def _jaccard_verify(
+    cands: DataFrame,
+    shingles: DataFrame,
+    threshold: float,
+    partner_text: DataFrame | None = None,
+    n: int = 3,
+) -> DataFrame:
+    """(new_id, dup_of, jaccard) for the candidate pairs whose exact
+    shingle-set Jaccard reaches ``threshold``: |A ∩ B| is the size of
+    the two sets' intersection, and pairs sharing no shingle are
+    dropped (as an inverted-index join never produces them), so
+    ``threshold=0.0`` still emits only overlapping pairs. Same score as
+    ``ngram_jaccard_pairs``: round_half_up(common / (|A|+|B|-common), 6).
+
+    Each doc's set is ONE ``collect_set`` over the raw (doc_id,
+    shingle) relation ``shingles``; both joins read those sets through
+    identical plans, so AQE shares their exchange. With
+    ``partner_text`` ((doc_id, text) rows) the dup_of side is built from
+    text instead: the join prunes that text to candidate partners and
+    each partner's n-gram set is computed after it — the indexed
+    incremental form, whose corpus has no shingle relation to read."""
+    sets = shingles.groupBy("doc_id").agg(F.collect_set("shingle").alias("s"))
+    sn = sets.select(F.col("doc_id").alias("new_id"), F.col("s").alias("sn"))
+    pairs = cands.join(sn, "new_id")
+    if partner_text is None:
+        pairs = pairs.join(
+            sets.select(F.col("doc_id").alias("dup_of"), F.col("s").alias("so")), "dup_of"
+        )
+    else:
+        pairs = pairs.join(
+            partner_text.select(F.col("doc_id").alias("dup_of"), "text"), "dup_of"
+        ).withColumn(
+            "so", F.array_distinct(F.filter(_grams("text", n), lambda g: g != ""))
+        )
+    common = F.size(F.array_intersect("sn", "so"))
+    return (
+        pairs.select(
+            "new_id",
+            "dup_of",
+            common.alias("common"),
+            F.size("sn").alias("sz_n"),
+            F.size("so").alias("sz_o"),
+        )
+        .where(F.col("common") > 0)
+        .withColumn(
+            "jaccard",
+            round_half_up(
+                F.col("common") / (F.col("sz_n") + F.col("sz_o") - F.col("common")), 6
+            ),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("new_id", "dup_of", "jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -239,7 +333,6 @@ def minhash_lsh_pairs(
     verify: bool = True,
     hash_impl: str = "xxhash64",
     shingles_raw: DataFrame | None = None,
-    shingles_distinct: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup candidate pairs, optionally
     verified with exact Jaccard (the scale path: LSH prunes the O(n^2)
@@ -248,6 +341,10 @@ def minhash_lsh_pairs(
 
     Returns (a, b, jaccard) like ``ngram_jaccard_pairs`` when
     verify=True; (a, b) candidates otherwise.
+
+    One signature aggregate, one bucket aggregate (``_lsh_candidates``)
+    and one shingle-set aggregate for the verify (``_jaccard_verify``);
+    nothing is cached, so repeated calls leave no storage behind.
     """
     rows_per_band = n_perm // bands
     # Widen a too-narrow doc scan BEFORE tokenize/shingle: the per-row
@@ -255,74 +352,40 @@ def minhash_lsh_pairs(
     # fixture file otherwise runs it on one core. Width 8 (not full
     # defaultParallelism) A/B-measured best — full query 9.4s -> 5.5s at
     # sf0.1, while 32-wide was net SLOWER (each extra partition carries
-    # its own n_perm x |docs| partial-min state into the combine, and the
-    # banded self-join re-shuffles the fan-out). No-op at 100TB where
-    # scans already carry >= 8 partitions.
+    # its own n_perm x |docs| partial-min state into the combine). No-op
+    # at 100TB where scans already carry >= 8 partitions.
     from ..io import widen
 
-    # One tokenize+explode pass feeds BOTH the signature aggregate and the
-    # exact-jaccard verify (via .distinct()): persisted so the doc scan +
-    # regex tokenization runs once, not twice. MEMORY_AND_DISK so a 100TB
-    # shingle set spills instead of OOMing executors. The cache lives for
-    # the app's lifetime (lazy-return API cannot unpersist); memory blocks
-    # are LRU-evicted under pressure, and long-lived drivers running many
-    # corpora should spark.catalog.clearCache() between them.
-    # ``shingles_raw`` / ``shingles_distinct``: prebuilt multiset / set
-    # shingle relations a composer (dedup_recall_report) shares with the
-    # exact-Jaccard side so the corpus is tokenized once per REPORT, not
-    # once per pipeline (optimization r10, guide §2.4) — value-identical,
-    # word_shingles is deterministic per doc. When given, ``docs`` is
-    # never touched (no widen — the shared relation carries its own).
-    from pyspark import StorageLevel
-
+    # The shingle relation feeds the signature aggregate and the
+    # verify's shingle sets. It is NOT persisted: both branches share the
+    # widened scan's exchange, so only the regex tokenization runs twice,
+    # and A/B at sf0.1 on a 4-core VM the cached form was no faster (cold
+    # 13.2/11.1s vs 11.6/11.5s) while it outlived the call — a returned
+    # lazy frame cannot unpersist. Both verify joins read the shingle
+    # sets through identical plans, so AQE reuses that exchange; under a
+    # cached input it cannot (the cache stage canonicalizes with raw
+    # expression ids).
+    # ``shingles_raw``: a prebuilt multiset shingle relation a composer
+    # (dedup_recall_report) shares with the exact-Jaccard side so the
+    # corpus is tokenized once per REPORT, not once per pipeline —
+    # value-identical, word_shingles is deterministic per doc. When
+    # given, ``docs`` is never touched (no widen — the shared relation
+    # carries its own).
     if shingles_raw is None:
         docs = widen(docs, 8)
-        sh_raw = word_shingles(docs, n=n, distinct=False).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        sh_raw = word_shingles(docs, n=n, distinct=False)
     else:
         sh_raw = shingles_raw
     sig = minhash_signatures(
         docs, n=n, n_perm=n_perm, seed=seed, shingles=sh_raw, hash_impl=hash_impl
     )
-    banded = _banded(sig, bands, rows_per_band)
-    # guard degenerate buckets (identical boilerplate content at scale)
-    bucket_sizes = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("bsz"))
-    banded = banded.join(
-        bucket_sizes.where(F.col("bsz") <= 10000).select("band", "bucket"),
-        ["band", "bucket"],
-    )
-    left = banded.select("band", "bucket", F.col("doc_id").alias("a"))
-    right = banded.select("band", "bucket", F.col("doc_id").alias("b"))
-    cands = (
-        left.join(right, ["band", "bucket"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    banded = _banded(sig, bands, rows_per_band).withColumn("is_new", F.lit(True))
+    cands = _lsh_candidates(banded)
+    # with every doc new, dup_of < new_id: (dup_of, new_id) is (a, b)
+    ab = (F.col("dup_of").alias("a"), F.col("new_id").alias("b"))
     if not verify:
-        return cands
-    # set semantics for exact jaccard
-    sh = sh_raw.distinct() if shingles_distinct is None else shingles_distinct
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        cands.join(sh.withColumnRenamed("doc_id", "a"), "a")
-        .join(sh.withColumnRenamed("doc_id", "b"), ["b", "shingle"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sz_a"), "a")
-        .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "sz_b"), "b")
-        .withColumn(
-            "jaccard",
-            round_half_up(
-                F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+        return cands.select(*ab)
+    return _jaccard_verify(cands, sh_raw, threshold).select(*ab, "jaccard")
 
 
 def embedding_dedup(
@@ -690,39 +753,29 @@ def minhash_lsh_incremental(
     (dup_of < new_id — first-in-batch keeps precedence, mirroring
     ``incremental_dedup``'s keeper rule).
 
-    Why it scales where the self-join doesn't:
-    - The corpus side only contributes banded rows in buckets the NEW
-      batch touches (a semi-join on (band, bucket)); candidate volume
-      scales with |batch|, not |corpus|^2. In production the corpus
-      signatures/buckets are a precomputed index stored bucketed by
-      (band, bucket) — the semi-join is then an index lookup and the
-      corpus TEXT is fetched only for verify candidates, which is
-      exactly how this function restricts its verify join.
-    - The degenerate-bucket cap applies to touched buckets only; all
-      rows of a touched bucket survive the semi-join, so the capped
-      population equals the full-corpus cap restricted to touched
-      buckets — same guard, batch-sized cost.
+    Shares its banding and verify with ``minhash_lsh_pairs``
+    (``_lsh_candidates``, ``_jaccard_verify``): banded rows carry an
+    ``is_new`` flag, the one bucket aggregate keeps only buckets that
+    hold a new doc, and pairs are emitted only for new docs — candidate
+    volume scales with |batch|, not |corpus|^2. The degenerate-bucket
+    cap counts every member of a kept bucket, so it equals the
+    full-corpus cap restricted to the batch's buckets.
 
     Index-less form (``corpus_index=None``): without a stored corpus
     index both sides must be signed anyway, so this computes ONE
     shingle pass + ONE signature aggregate over the tagged union
     (``carry=('is_new',)`` threads the membership flag through
-    explode/groupBy — no |docs|-sized join back). A first cut signed
-    each side separately: two shingle scans, two 64-min aggregates, and
-    a lineage that re-expanded per consumer — 8.1s cold / 4.5s warm at
-    sf0.01 vs 2.7s warm for the FULL self-join it was supposed to beat.
-    The single-pass form is the full-LSH signing cost plus a
-    batch-sized candidate join.
+    explode/groupBy — no |docs|-sized join back); the verify's shingle
+    sets come from that same shingle pass.
 
     Indexed form (``corpus_index`` = ``build_minhash_index`` output,
     typically read back from a (band, bucket)-bucketed table): the
     corpus is neither shingled nor signed — only the BATCH is, and the
-    corpus text is scanned once, pruned to verify candidates. This is
-    the steady-state 100TB ingest plan; results are pinned identical to
-    the index-less form (tests/test_minhash_recall.py).
+    corpus text is scanned once, joined to the candidate pairs: only
+    candidate partners' n-gram sets are built. This is the
+    steady-state 100TB ingest plan; results are pinned identical to the
+    index-less form (tests/test_minhash_recall.py).
     """
-    from pyspark import StorageLevel
-
     from ..io import widen
 
     rows_per_band = n_perm // bands
@@ -730,105 +783,40 @@ def minhash_lsh_incremental(
         tagged = widen(new_docs, 8).withColumn("is_new", F.lit(True)).unionByName(
             widen(corpus, 8).withColumn("is_new", F.lit(False))
         )
-        sh_all = word_shingles(
-            tagged, n=n, distinct=False, carry=("is_new",)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # feeds the signature aggregate and the verify's shingle sets,
+        # uncached for the reasons given in minhash_lsh_pairs
+        sh = word_shingles(tagged, n=n, distinct=False, carry=("is_new",))
         sig = minhash_signatures(
             tagged,
             n=n,
             n_perm=n_perm,
             seed=seed,
-            shingles=sh_all,
+            shingles=sh,
             hash_impl=hash_impl,
             carry=("is_new",),
         )
-        banded = _banded(sig, bands, rows_per_band, carry=("is_new",))
-        sh_new = sh_all.where(F.col("is_new")).select("doc_id", "shingle")
-    else:
-        new8 = widen(new_docs, 8)
-        sh_new = word_shingles(new8, n=n, distinct=False).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        sig_new = minhash_signatures(
-            new8, n=n, n_perm=n_perm, seed=seed, shingles=sh_new,
-            hash_impl=hash_impl,
-        )
-        banded = (
-            _banded(sig_new, bands, rows_per_band)
-            .withColumn("is_new", F.lit(True))
-            .unionByName(
-                corpus_index.select("doc_id", "band", "bucket").withColumn(
-                    "is_new", F.lit(False)
-                )
+        cands = _lsh_candidates(_banded(sig, bands, rows_per_band, carry=("is_new",)))
+        return _jaccard_verify(cands, sh, threshold)
+    new8 = widen(new_docs, 8)
+    sh_new = word_shingles(new8, n=n, distinct=False)
+    sig_new = minhash_signatures(
+        new8, n=n, n_perm=n_perm, seed=seed, shingles=sh_new, hash_impl=hash_impl
+    )
+    cands = _lsh_candidates(
+        _banded(sig_new, bands, rows_per_band)
+        .withColumn("is_new", F.lit(True))
+        .unionByName(
+            corpus_index.select("doc_id", "band", "bucket").withColumn(
+                "is_new", F.lit(False)
             )
         )
-    touched = banded.where(F.col("is_new")).select("band", "bucket").distinct()
-    u = banded.join(touched, ["band", "bucket"], "left_semi")
-    # The touched union is consumed three times (cap sizes, a-side,
-    # b-side) and candidate pairs twice (verify restriction +
-    # intersection). Without a persist each consumer re-expands the full
-    # signature lineage; both cached relations are batch-scale (banded
-    # rows in touched buckets; candidate id pairs).
-    u = u.persist(StorageLevel.MEMORY_AND_DISK)
-    bucket_sizes = u.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("bsz"))
-    u = u.join(
-        bucket_sizes.where(F.col("bsz") <= 10000).select("band", "bucket"),
-        ["band", "bucket"],
     )
-    a = u.select(
-        "band", "bucket", F.col("doc_id").alias("dup_of"), F.col("is_new").alias("a_new")
+    # the one corpus-text read, pruned by the verify join to candidate
+    # partners (earlier new docs are partners too)
+    partners = new_docs.select("doc_id", "text").unionByName(
+        corpus.select("doc_id", "text")
     )
-    b = u.where(F.col("is_new")).select(
-        "band", "bucket", F.col("doc_id").alias("new_id")
-    )
-    cands = (
-        a.join(b, ["band", "bucket"])
-        .where((~F.col("a_new")) | (F.col("dup_of") < F.col("new_id")))
-        .where(F.col("dup_of") != F.col("new_id"))
-        .select("new_id", "dup_of")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Exact-Jaccard verify: corpus shingles are kept ONLY for candidate
-    # partners (semi-join). In the indexed form this is the one and only
-    # corpus-text read; index-less, it prunes the cached shingle relation.
-    cand_ids = cands.select(F.col("dup_of").alias("doc_id")).distinct()
-    if corpus_index is None:
-        sh_corpus_cand = (
-            sh_all.where(~F.col("is_new"))
-            .select("doc_id", "shingle")
-            .join(cand_ids, "doc_id", "left_semi")
-        )
-    else:
-        sh_corpus_cand = word_shingles(
-            corpus.join(cand_ids, "doc_id", "left_semi"), n=n, distinct=False
-        )
-    sh = sh_new.unionByName(sh_corpus_cand).distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        cands.join(sh.withColumnRenamed("doc_id", "dup_of"), "dup_of")
-        .join(sh.withColumnRenamed("doc_id", "new_id"), ["new_id", "shingle"])
-        .groupBy("new_id", "dup_of")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return (
-        inter.join(
-            sizes.withColumnRenamed("doc_id", "new_id").withColumnRenamed("sz", "sz_n"),
-            "new_id",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "dup_of").withColumnRenamed("sz", "sz_o"),
-            "dup_of",
-        )
-        .withColumn(
-            "jaccard",
-            round_half_up(
-                F.col("common") / (F.col("sz_n") + F.col("sz_o") - F.col("common")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("new_id", "dup_of", "jaccard")
-    )
+    return _jaccard_verify(cands, sh_new, threshold, partners, n)
 
 
 def duplicate_substring_spans(
@@ -1206,10 +1194,10 @@ def dedup_recall_report(
     # §2.4 — VERDICT r9 #4): the exact n-gram side and the MinHash-LSH
     # side each built their OWN tokenize+explode chain (one distinct,
     # one raw-persisted) over the same corpus. Share the raw multiset
-    # (persisted — feeds the signature aggregate) and ONE distinct set
-    # (checkpointed — feeds the exact inverted index AND the LSH
-    # verify). Value-identical: word_shingles is deterministic per doc
-    # and min-over-multiset == min-over-set for the signatures.
+    # (persisted — feeds the LSH signature aggregate and shingle sets,
+    # and is the source of the distinct set the exact inverted index
+    # checkpoints). Value-identical: word_shingles is deterministic per
+    # doc and min-over-multiset == min-over-set for the signatures.
     docs_w = widen(docs, 8)
     sh_raw = word_shingles(docs_w, n=n, distinct=False).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -1229,7 +1217,7 @@ def dedup_recall_report(
     approx = (
         minhash_lsh_pairs(
             docs, n=n, threshold=threshold, hash_impl=hash_impl,
-            shingles_raw=sh_raw, shingles_distinct=sh_dist,
+            shingles_raw=sh_raw,
         )
         .select("a", "b")
         .localCheckpoint(eager=False)

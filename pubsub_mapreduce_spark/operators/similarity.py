@@ -2102,6 +2102,23 @@ _PQ_ADC_FROM_LUT = (
 )
 
 
+def _fused_topk(tagged: DataFrame, k: int) -> DataFrame:
+    """(idx, query_id, neighbor_id, a_rank): top-k per (idx, query_id)
+    over a union of several indexes' scored rows in ONE window. A row
+    carries either ``sim`` (ranked desc, exactly ``_topk``'s order, NaN
+    first) or ``adist`` (ranked asc); the other column is null, so
+    within a partition the null column ties and each index ranks by its
+    own direction, then by neighbor_id asc."""
+    w = Window.partitionBy("idx", "query_id").orderBy(
+        F.col("sim").desc(), F.col("adist").asc(), F.col("neighbor_id").asc()
+    )
+    return (
+        tagged.withColumn("a_rank", F.row_number().over(w))
+        .where(F.col("a_rank") <= k)
+        .select("idx", "query_id", "neighbor_id", "a_rank")
+    )
+
+
 def ann_recall_report(
     emb: DataFrame, k: int = 5, every: int = 50
 ) -> DataFrame:
@@ -2153,30 +2170,22 @@ def ann_recall_report(
     # ONE ranking window for all four indexes (optimization r10, guide
     # §2.4): the per-index _topk windows fused into a single
     # (idx, query_id)-partitioned row_number over the tagged scored
-    # union. Value-identical per index: lsh/ivf rank by (sim desc,
-    # neighbor asc) == (negate(sim) asc, neighbor asc) — negation is
-    # exact and preserves the ordering classes — and pq/ivfpq already
-    # rank by (adist asc, neighbor asc), so one ascending ``key``
-    # column carries both ranking directions.
+    # union (``_fused_topk``). Each index keeps its own direction:
+    # lsh/ivf carry ``sim`` (ranked desc, as in _topk), pq/ivfpq carry
+    # ``adist`` (ranked asc), and the other column is null.
     approx = [
-        (
-            "lsh",
-            ann_lsh_topk(emb, k=k, every=every, _scored=True, **share),
-            -F.col("sim"),
-        ),
+        ("lsh", ann_lsh_topk(emb, k=k, every=every, _scored=True, **share)),
         (
             "ivf",
             ann_ivf_topk(
                 emb, k=k, every=every, cents=cents, _scored=True, **share
             ),
-            -F.col("sim"),
         ),
         (
             "pq",
             ann_pq_topk(
                 emb, k=k, every=every, seeds=seeds, _scored=True, **share
             ),
-            F.col("adist"),
         ),
         (
             "ivfpq",
@@ -2184,27 +2193,21 @@ def ann_recall_report(
                 emb, k=k, every=every, cents=cents, seeds=seeds,
                 _scored=True, **share
             ),
-            F.col("adist"),
         ),
     ]
     u = None
-    for name, df, key in approx:
+    for name, df in approx:
         part = df.select(
             F.lit(name).alias("idx"),
             "query_id",
             "neighbor_id",
-            key.alias("key"),
+            *(
+                F.col(c) if c in df.columns else F.lit(None).cast("double").alias(c)
+                for c in ("sim", "adist")
+            ),
         )
         u = part if u is None else u.unionByName(part)
-    wk = Window.partitionBy("idx", "query_id").orderBy(
-        F.col("key").asc(), F.col("neighbor_id").asc()
-    )
-    a = (
-        u.withColumn("a_rank", F.row_number().over(wk))
-        .where(F.col("a_rank") <= k)
-        .select("idx", "query_id", "neighbor_id", "a_rank")
-    )
-    a = a.localCheckpoint(eager=False)
+    a = _fused_topk(u, k).localCheckpoint(eager=False)
     # ONE left join + ONE aggregate replace the former matched-join-agg
     # AND top1-join-agg chains (optimization r10, guide §2.4): exact
     # pairs are unique per (query_id, neighbor_id) — a per-query

@@ -10,6 +10,7 @@ so tests can pin those properties.
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -76,6 +77,34 @@ def keyed_shuffle_count(df: DataFrame) -> int:
     rr = plan.count("Arguments: RoundRobinPartitioning")
     sp = plan.count("Arguments: SinglePartition")
     return max(0, len(headers) - rr - sp)
+
+
+def repeated_exchanges(plan: str) -> int:
+    """How many keyed exchanges of a formatted plan repeat another one:
+    same partitioning and same input columns once expression ids are
+    stripped. Each member of a repeated group counts (4 copies -> 4).
+    Such a group usually means one subtree is computed once per
+    consumer — Catalyst has no cross-branch CSE, and branches that
+    differ only in an inferred filter are not reused. An exchange AQE
+    did reuse shows as a ``ReusedExchange`` node, not an ``Exchange``,
+    so it never counts; in a plan not yet executed AQE has reused
+    nothing, so a repeat there may still be reused at run time.
+    Round-robin and single-partition exchanges are excluded, as in
+    ``keyed_shuffle_count``."""
+    keys: Counter[tuple[str, ...]] = Counter()
+    for block in plan.split("\n\n"):
+        if not re.match(r"\(\d+\) Exchange\n", block):
+            continue
+        inp = re.search(r"^Input \[\d+\]: (.*)$", block, re.M)
+        args = re.search(r"^Arguments: (.*)$", block, re.M)
+        if not args or args.group(1).startswith(("RoundRobinPartitioning", "SinglePartition")):
+            continue
+        key = tuple(
+            re.sub(r"#\d+|, \[plan_id=\d+\]", "", m.group(1) if m else "")
+            for m in (inp, args)
+        )
+        keys[key] += 1
+    return sum(c for c in keys.values() if c > 1)
 
 
 def assert_max_shuffles(df: DataFrame, n: int) -> None:

@@ -3,8 +3,9 @@ pipeline actually runs — a document stream lands in micro-batches, each
 batch is LSH-matched against the ever-growing admitted corpus through
 the STORED MinHash index, survivors are appended to the corpus store
 and their banded rows to the index. No corpus re-signing, ever: per
-batch the corpus contributes (a) an index scan pruned to touched
-buckets and (b) one text read pruned to verify candidates.
+batch the corpus contributes (a) an index scan whose buckets without a
+batch doc drop out in the bucket aggregate and (b) one text read pruned
+to verify candidates.
 
 Tiering (the streaming dedup family, weakest->strongest):
 - ``pipeline.dedup_stream``      exact content hash, watermark state
@@ -110,11 +111,9 @@ class LshIngest:
             self._mark(batch_id)
         finally:
             batch.unpersist()
-            # the LSH operator's internal persists (shingles, touched
-            # buckets, candidate pairs) are single-use per micro-batch;
-            # an unbounded stream would accumulate unbounded cache
-            # without an explicit drop — measured OOM after ~6 batches
-            # at 8g driver heap without this
+            # drops what this handler cached even when a write failed
+            # (the LSH operator itself caches nothing); an unbounded
+            # stream would otherwise accumulate cache
             spark.catalog.clearCache()
 
 

@@ -76,7 +76,7 @@ PARITY_FRESH = {
     "dedup_minhash_incremental", "moran_geary", "multimodal_audio_pairs",
     "multimodal_dup_consensus", "emb_coreset", "dedup_canonical",
     "dedup_clusters", "dedup_edit_verify", "dedup_scrub_spans",
-    "part_kcore", "adamic_adar", "part_communities", "event_pagerank",
+    "part_kcore", "adamic_adar", "part_communities",
 }
 
 

@@ -9,6 +9,8 @@ projections stay inside whole-stage codegen.
 
 from __future__ import annotations
 
+import re
+
 import __spark_entry__ as entrymod
 from pubsub_mapreduce_spark.plans.explain import (
     assert_broadcast_join,
@@ -534,14 +536,18 @@ def test_rare_tokens_shape(spark):
 
 
 def test_incremental_minhash_no_allpairs(spark):
-    """Incremental LSH: candidates only via the (band, bucket)
-    equi-join; the corpus side must ride a LeftSemi bucket restriction
-    and the plan must contain no all-pairs shape."""
+    """Incremental LSH: candidates only from (band, bucket) member
+    lists; the corpus side must ride the touched-bucket restriction (the
+    bucket aggregate keeps only lists holding a new doc) and the plan
+    must contain no all-pairs shape."""
     df = q("dedup_minhash_incremental", spark)
     assert_no_cartesian(df)
     assert node_count(df, "BroadcastNestedLoopJoin") == 0
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, "touched-bucket semi-join missing"
+    assert re.search(r"keys=\[band#\d+, bucket#\d+L\], functions=\[collect_list\(", plan)
+    assert re.search(r"Filter .*exists\(m#\d+, lambdafunction\(lambda \w+#\d+\.is_new", plan), (
+        "touched-bucket restriction missing"
+    )
 
 
 def test_mad_association_shapes(spark):

@@ -128,7 +128,7 @@ def test_minhash_incremental_at_scale_resolves_planted_batch(spark, big_docs):
     copies of corpus docs + 20 genuinely new) against the 20k corpus
     with a PREBUILT index — every copy must resolve to its source,
     every new doc must pass clean, and the candidate work must ride the
-    touched-bucket semi-join (no all-pairs, no corpus re-sign)."""
+    touched-bucket restriction (no all-pairs, no corpus re-sign)."""
     from pubsub_mapreduce_spark.operators.dedup import (
         build_minhash_index,
         minhash_lsh_incremental,

@@ -4,10 +4,14 @@ The correctness sweep proves the ANSWERS; this artifact proves the
 PLANS — for each ``queries()`` entry at sf0.001 (plan shape is
 SF-independent; the tiny fixture keeps analysis fast), one line:
 
-    name  shuffles=K  bcast=B  scans=S  cartesian=Y/N  codegen=C
+    name  shuffles=K  repeats=R  bcast=B  scans=S  cartesian=Y/N  codegen=C
 
 where ``shuffles`` counts KEYED exchanges (round-robin widening
-excluded — ``plans.explain.keyed_shuffle_count``), ``bcast`` counts
+excluded — ``plans.explain.keyed_shuffle_count``), ``repeats`` counts
+keyed exchanges whose partitioning and input columns (expression ids
+stripped) occur more than once with no ``ReusedExchange`` — a subtree
+computed once per consumer (``plans.explain.repeated_exchanges``),
+``bcast`` counts
 broadcast joins, ``scans`` counts parquet scan nodes (a query that
 re-scans a table it already aggregated shows up here), ``cartesian``
 flags CartesianProduct nodes, and ``codegen`` counts fused
@@ -27,6 +31,7 @@ import __spark_entry__ as m
 from pubsub_mapreduce_spark.plans.explain import (
     explain_str,
     keyed_shuffle_count,
+    repeated_exchanges,
 )
 from pubsub_mapreduce_spark.session import get_spark
 
@@ -41,7 +46,8 @@ def audit_line(name, df) -> str:
     cartesian = "Y" if "CartesianProduct" in plan else "N"
     codegen = len(set(re.findall(r"codegen id : (\d+)", plan)))
     return (
-        f"{name} shuffles={shuffles} bcast={bcast} scans={scans} "
+        f"{name} shuffles={shuffles} repeats={repeated_exchanges(plan)} "
+        f"bcast={bcast} scans={scans} "
         f"cartesian={cartesian} codegen={codegen}"
     )
 
