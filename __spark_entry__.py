@@ -305,14 +305,12 @@ def q_dedup_minhash_incremental(spark, sf_dir):
     """NEAR-dup twin of dedup_incremental (same doc_id%10 batch split):
     new-crawl docs LSH-matched against corpus + earlier-batch docs
     (dedup.minhash_lsh_incremental — only buckets holding a new doc
-    emit pairs, so candidate volume scales with |batch|). hash_impl='md5' upgrades it
-    to a FULL value-hash oracle, same mirroring as dedup_minhash_lsh."""
+    emit pairs, so candidate volume scales with |batch|). FULL
+    value-hash oracle, same mirroring as dedup_minhash_lsh."""
     docs = load_tables(spark, sf_dir)["documents"]
     corpus = docs.where(F.col("doc_id") % 10 < 8)
     new_batch = docs.where(F.col("doc_id") % 10 >= 8)
-    return dedup.minhash_lsh_incremental(
-        new_batch, corpus, n=3, threshold=0.5, hash_impl="md5"
-    )
+    return dedup.minhash_lsh_incremental(new_batch, corpus, n=3, threshold=0.5)
 
 
 def q_event_outliers(spark, sf_dir):
@@ -699,16 +697,13 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    """hash_impl='md5': the DuckDB-portable base hash (token_hash32 %
-    p) instead of xxhash64, upgrading this from a rows-only check to a
+    """The DuckDB-portable base hash (token_hash32 % p) makes this a
     FULL value-hash oracle — the twin mirrors signatures (same
     universal-hash coefficients), banding (join on raw signature
     slices; slice equality == bucket equality), the degenerate-bucket
-    cap, and the exact-Jaccard verify. A/B'd ~0.7s slower at sf0.1
-    than xxhash64 (which stays the no-oracle default for deployments
-    without a cross-engine requirement)."""
+    cap, and the exact-Jaccard verify."""
     return dedup.minhash_lsh_pairs(
-        load_tables(spark, sf_dir)["documents"], n=3, threshold=0.5, hash_impl="md5"
+        load_tables(spark, sf_dir)["documents"], n=3, threshold=0.5
     )
 
 
@@ -2376,29 +2371,21 @@ def q_knn_graph(spark, sf_dir):
     a scale-killer at |corpus| growth. The celled form collects only the
     capped centroid set; contract = exact kNN within the nprobe probed
     cells, which the DuckDB oracle mirrors exactly (same centroids,
-    same argmax assignment, bit-equal HOF sims). assign_via='literal'
-    pins the pure-JVM HOF arithmetic for the oracle; the production
-    default is the BLAS assign+probe pass (benched via bench.py's
-    variant overlay, output-equality pinned in tests)."""
+    same argmax assignment, bit-equal HOF sims)."""
     return S.ivf_knn_graph(
         load_tables(spark, sf_dir)["embeddings"],
         k=3,
         centroid_every=100,
         n_max_centroids=512,
         nprobe=2,
-        assign_via="literal",
     )
 
 
 def q_sim_ann_ivf(spark, sf_dir):
-    """IVF ANN over a bounded query subset. assign_via='literal' (the
-    pure-JVM HOF argmax) rather than the BLAS matmul default: sequential
-    HOF dots are bit-equal to DuckDB's list_cosine_similarity, which
-    upgrades this from a rows-only check to a full value-hash oracle
-    (BLAS summation order could ulp-flip a near-tied argmax)."""
-    return S.ann_ivf_topk(
-        load_tables(spark, sf_dir)["embeddings"], k=5, every=50, assign_via="literal"
-    )
+    """IVF ANN over a bounded query subset. The pure-JVM HOF argmax's
+    sequential dots are bit-equal to DuckDB's list_cosine_similarity,
+    which makes this a full value-hash oracle."""
+    return S.ann_ivf_topk(load_tables(spark, sf_dir)["embeddings"], k=5, every=50)
 
 
 def q_simhash_near_pairs(spark, sf_dir):
@@ -4257,7 +4244,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def _minhash_lsh_oracle_sql(threshold: float = 0.5) -> str:
-    """DuckDB mirror of ``dedup.minhash_lsh_pairs(hash_impl='md5')``:
+    """DuckDB mirror of ``dedup.minhash_lsh_pairs``:
     same shingles, same md5-derived base hash, the same 64
     universal-hash permutation mins (coefficients shared via
     ``dedup._perm_coeffs``), banding as a join on the raw 4-min
@@ -4315,7 +4302,7 @@ def _minhash_lsh_oracle_sql(threshold: float = 0.5) -> str:
 
 
 def _minhash_incremental_oracle_sql(threshold: float = 0.5) -> str:
-    """DuckDB mirror of ``dedup.minhash_lsh_incremental(hash_impl='md5')``
+    """DuckDB mirror of ``dedup.minhash_lsh_incremental``
     over the doc_id%10 batch split: signatures for ALL docs (a doc's
     signature depends only on its own shingles, so computing per-split
     or globally is identical), banding on raw signature slices, the

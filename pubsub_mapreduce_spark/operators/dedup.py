@@ -176,7 +176,6 @@ def minhash_signatures(
     n_perm: int = N_PERM,
     seed: int = 42,
     shingles: DataFrame | None = None,
-    hash_impl: str = "xxhash64",
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """MinHash signatures: per doc, ``min((a_i*h + b_i) mod p)`` over its
@@ -185,22 +184,13 @@ def minhash_signatures(
     one row per (doc, shingle), aggregated with ``zip_with``-style
     elementwise min via array aggregate.
 
-    ``hash_impl``: base shingle hash. ``xxhash64`` (default) is the
-    JVM-native non-crypto hash — no MD5, no hex-string round-trip;
-    ``md5`` keeps the DuckDB-portable ``token_hash32`` (only needed when
-    an external engine must reproduce signatures bit-for-bit). Either
-    way the LSH output is exact-Jaccard-verified, so hash choice moves
-    candidate recall only, never emits a false pair. A/B at sf0.1
-    (5 interleaved reps): median 4.3s vs 5.0s for md5 with far lower
-    variance; recall identical (1.0) at sf0.01. At 100TB the gap is
-    pure per-shingle CPU: one JVM hash vs MD5 + hex-substring + conv."""
+    The base shingle hash is the md5-derived ``token_hash32``, which
+    DuckDB reproduces bit for bit, so the oracle twins can rebuild the
+    same signatures. The LSH output is exact-Jaccard-verified, so the
+    base hash moves candidate recall only, never emits a false pair."""
     coeffs = _perm_coeffs(n_perm, seed)
     sh = word_shingles(docs, n=n, carry=carry) if shingles is None else shingles
-    base = (
-        F.pmod(F.xxhash64(F.col("shingle")), F.lit(MERSENNE_P))
-        if hash_impl == "xxhash64"
-        else token_hash32(F.col("shingle")) % F.lit(MERSENNE_P)
-    )
+    base = token_hash32(F.col("shingle")) % F.lit(MERSENNE_P)
     hm = sh.select("doc_id", *carry, base.alias("hm"))
     # n_perm independent MIN aggregates over one base hash column: a single
     # shuffle of (doc_id -> n_perm partial mins), all map-side combined.
@@ -331,7 +321,6 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     seed: int = 42,
     verify: bool = True,
-    hash_impl: str = "xxhash64",
     shingles_raw: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding near-dup candidate pairs, optionally
@@ -376,9 +365,7 @@ def minhash_lsh_pairs(
         sh_raw = word_shingles(docs, n=n, distinct=False)
     else:
         sh_raw = shingles_raw
-    sig = minhash_signatures(
-        docs, n=n, n_perm=n_perm, seed=seed, shingles=sh_raw, hash_impl=hash_impl
-    )
+    sig = minhash_signatures(docs, n=n, n_perm=n_perm, seed=seed, shingles=sh_raw)
     banded = _banded(sig, bands, rows_per_band).withColumn("is_new", F.lit(True))
     cands = _lsh_candidates(banded)
     # with every doc new, dup_of < new_id: (dup_of, new_id) is (a, b)
@@ -716,7 +703,6 @@ def build_minhash_index(
     n_perm: int = N_PERM,
     bands: int = LSH_BANDS,
     seed: int = 42,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """The precomputed corpus side of ``minhash_lsh_incremental``:
     (doc_id, band, bucket) banded rows. Build once, persist with
@@ -727,9 +713,7 @@ def build_minhash_index(
     (no rebuild)."""
     from ..io import widen
 
-    sig = minhash_signatures(
-        widen(corpus, 8), n=n, n_perm=n_perm, seed=seed, hash_impl=hash_impl
-    )
+    sig = minhash_signatures(widen(corpus, 8), n=n, n_perm=n_perm, seed=seed)
     return _banded(sig, bands, n_perm // bands)
 
 
@@ -741,7 +725,6 @@ def minhash_lsh_incremental(
     bands: int = LSH_BANDS,
     threshold: float = 0.5,
     seed: int = 42,
-    hash_impl: str = "xxhash64",
     corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup: the new-crawl-vs-existing-corpus form of
@@ -792,16 +775,13 @@ def minhash_lsh_incremental(
             n_perm=n_perm,
             seed=seed,
             shingles=sh,
-            hash_impl=hash_impl,
             carry=("is_new",),
         )
         cands = _lsh_candidates(_banded(sig, bands, rows_per_band, carry=("is_new",)))
         return _jaccard_verify(cands, sh, threshold)
     new8 = widen(new_docs, 8)
     sh_new = word_shingles(new8, n=n, distinct=False)
-    sig_new = minhash_signatures(
-        new8, n=n, n_perm=n_perm, seed=seed, shingles=sh_new, hash_impl=hash_impl
-    )
+    sig_new = minhash_signatures(new8, n=n, n_perm=n_perm, seed=seed, shingles=sh_new)
     cands = _lsh_candidates(
         _banded(sig_new, bands, rows_per_band)
         .withColumn("is_new", F.lit(True))
@@ -1167,7 +1147,6 @@ def dedup_recall_report(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.5,
-    hash_impl: str = "md5",
 ) -> DataFrame:
     """Dedup-quality evaluation IN the engine: MinHash-LSH near-dup
     pairs scored against the exact n-gram-Jaccard ground truth — one
@@ -1215,10 +1194,7 @@ def dedup_recall_report(
         .localCheckpoint(eager=False)
     )
     approx = (
-        minhash_lsh_pairs(
-            docs, n=n, threshold=threshold, hash_impl=hash_impl,
-            shingles_raw=sh_raw,
-        )
+        minhash_lsh_pairs(docs, n=n, threshold=threshold, shingles_raw=sh_raw)
         .select("a", "b")
         .localCheckpoint(eager=False)
     )
@@ -1407,7 +1383,7 @@ def leakproof_split(
     closure with a recursive CTE over the validated pair oracle."""
     from .sampling import hash_bucket
 
-    pairs = minhash_lsh_pairs(docs, n=3, threshold=threshold, hash_impl="md5")
+    pairs = minhash_lsh_pairs(docs, n=3, threshold=threshold)
     comp = connected_components(pairs)
     assigned = (
         docs.select("doc_id")
@@ -1448,7 +1424,7 @@ def cross_source_dups(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     only additions are two broadcast-friendly doc_id->source
     decorations and the inequality filter. Output bounded by the
     near-dup pair count."""
-    pairs = minhash_lsh_pairs(docs, threshold=threshold, hash_impl="md5")
+    pairs = minhash_lsh_pairs(docs, threshold=threshold)
     src = docs.select("doc_id", "source")
     return (
         pairs.join(
@@ -1555,7 +1531,7 @@ def edit_verify_pairs(
             max_len,
         ).alias("cmp_text"),
     )
-    pairs = minhash_lsh_pairs(docs, threshold=threshold, hash_impl="md5")
+    pairs = minhash_lsh_pairs(docs, threshold=threshold)
     scored = (
         pairs.join(
             cmp.select(

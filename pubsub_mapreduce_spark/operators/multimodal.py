@@ -457,9 +457,7 @@ def dup_consensus(
     oracles verbatim."""
     from .dedup import minhash_lsh_pairs
 
-    text_pairs = minhash_lsh_pairs(
-        docs, n=3, threshold=threshold, hash_impl="md5"
-    )
+    text_pairs = minhash_lsh_pairs(docs, n=3, threshold=threshold)
     img_pairs = phash_near_pairs(attach_media(docs), max_hamming=max_hamming)
     return (
         text_pairs.join(img_pairs, ["a", "b"], "full_outer")

@@ -718,90 +718,6 @@ def refine_centroids(
     return cents
 
 
-def assign_centroids_matmul(
-    e: DataFrame, cents: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """Scale path for nearest-centroid assignment when |C| outgrows a
-    plan literal (>~1k centroids, a real IVF nlist at 100TB is 2^14+):
-    the (C, D) centroid matrix rides in the UDF closure (a broadcast by
-    construction) and each Arrow batch scores against ALL centroids in
-    one ``(N, D) @ (D, C)`` BLAS matmul. Still map-only — no shuffle, no
-    row blowup; output schema = input + ``cid``.
-
-    Tie-break parity with ``_nearest_centroid``: centroid rows are in
-    ascending-cid order and ``np.argmax`` returns the FIRST maximum, so
-    equal sims resolve to the smallest cid on both paths (BLAS rounding
-    can still flip near-equal sims — an assignment detail that ANN
-    recall, not exact equality, is the contract for)."""
-    import pandas as pd
-
-    cids = np.array([c for c, _ in cents], dtype=np.int64)
-    cmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in cents])
-    norms = np.linalg.norm(cmat, axis=1, keepdims=True)
-    norms[norms == 0] = np.inf  # zero centroid -> sim 0.0, like cosine()
-    cmat = cmat / norms
-
-    def assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = np.inf  # zero vector -> all sims 0.0
-            sims = (m / n) @ cmat.T  # (N, C)
-            out = pdf[["vec_id", "embedding"]].copy()
-            out["cid"] = cids[np.argmax(sims, axis=1)]
-            yield out
-
-    return e.mapInPandas(assign, "vec_id long, embedding array<double>, cid long")
-
-
-def assign_probe_matmul(
-    e: DataFrame, cents: list[tuple[int, list[float]]], nprobe: int
-) -> DataFrame:
-    """BLAS sibling of the literal assign+probe pair used by
-    ``ivf_knn_graph``: ONE Arrow ``mapInPandas`` pass scores each batch
-    against all centroids ((N, D) @ (D, C)) and emits both the nearest
-    cell (``cid``) and the top-``nprobe`` probe list (``probe_cids``),
-    replacing TWO interpreted per-element HOF passes (argmax fold +
-    array_sort comparator) with one matmul + one ``np.argsort``. Still
-    map-only, no shuffle. Tie-break parity: stable argsort on (-sim,
-    cid) via lexsort — equal sims resolve to the smaller cid, same as
-    the HOF comparator (BLAS rounding can still flip NEAR-equal sims,
-    which is why the exact-oracle gate forms keep the literal path —
-    ANN recall, not bit equality, is this path's contract)."""
-    import pandas as pd
-
-    cids = np.array([c for c, _ in cents], dtype=np.int64)
-    cmat = np.stack([np.asarray(v, dtype=np.float64) for _, v in cents])
-    norms = np.linalg.norm(cmat, axis=1, keepdims=True)
-    norms[norms == 0] = np.inf
-    cmat = cmat / norms
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            n = np.linalg.norm(m, axis=1, keepdims=True)
-            n[n == 0] = np.inf
-            sims = (m / n) @ cmat.T  # (N, C)
-            # top-nprobe by (sim desc, cid asc): argsort ascending on
-            # negated sims is stable only via lexsort keys
-            order = np.lexsort((np.broadcast_to(cids, sims.shape), -sims))
-            top = cids[order[:, :nprobe]]
-            out = pdf[["vec_id", "embedding"]].copy()
-            out["cid"] = top[:, 0]
-            out["probe_cids"] = [list(map(int, row)) for row in top]
-            yield out
-
-    return e.mapInPandas(
-        run,
-        "vec_id long, embedding array<double>, cid long, "
-        "probe_cids array<long>",
-    )
-
-
 def ivf_centroids(
     e: DataFrame, centroid_every: int = 100, n_max_centroids: int = 512
 ) -> list[tuple[int, list[float]]]:
@@ -825,7 +741,6 @@ def ivf_knn_graph(
     centroid_every: int = 100,
     n_max_centroids: int = 512,
     nprobe: int = 2,
-    assign_via: str = "matmul",
     cents: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Corpus-wide kNN graph via IVF cells — every vector is a query,
@@ -841,19 +756,16 @@ def ivf_knn_graph(
     the fixtures' isotropic vectors it is the nprobe/|C| coverage
     fraction, the regime where every sublinear method degrades.
 
-    Plan shape: centroids ride as a bounded plan literal; with the
-    default ``assign_via='matmul'`` ONE Arrow pass emits both the cell
-    assignment and the probe list via BLAS (``assign_probe_matmul`` —
-    A/B at sf0.1: 1.5s vs 2.3s literal, and the gap widens with |C|);
-    ``assign_via='literal'`` keeps everything JVM-side — map-only HOF
-    argmax + array_sort+slice probe selection — whose sequential
-    arithmetic is bit-equal to DuckDB's list_cosine_similarity, which
-    is what the driver exact-hash gate form uses (oracle:
-    ``duckdb_ivf_knn_sql``; BLAS could ulp-flip a near-tied argmax).
-    Either way there is NO |corpus| x |C| explode+window shuffle (only
-    nprobe rows explode per vector); the candidate join is an equi-join
-    on cid (sort-merge over |C| keys — AQE splits skewed cells); pair
-    scoring is the sequential HOF cosine. The only corpus-sized
+    Plan shape: centroids ride as a bounded plan literal and everything
+    stays JVM-side — one map-only HOF pass sorts the centroid sims and
+    keeps the top-``nprobe`` slice, whose first element is the cell
+    assignment. The sequential HOF arithmetic is bit-equal to DuckDB's
+    list_cosine_similarity (oracle: ``duckdb_ivf_knn_sql``), so a
+    near-tied argmax resolves the same way in both engines. There is
+    NO |corpus| x |C| explode+window shuffle (only nprobe rows explode
+    per vector); the candidate join is an equi-join on cid (sort-merge
+    over |C| keys — AQE splits skewed cells); pair scoring is the
+    sequential HOF cosine. The only corpus-sized
     shuffles: the cid join and the final per-query top-k window."""
     e0 = _as_double(emb).select("vec_id", "embedding")
     if cents is None:
@@ -863,64 +775,42 @@ def ivf_knn_graph(
         cents = ivf_centroids(e0, centroid_every, n_max_centroids)
     from ..io import widen
 
-    e = widen(e0, 8)
-    if assign_via == "matmul":
-        # bench/scale path: one Arrow pass yields cid + probe list via
-        # BLAS (A/B at sf0.1 in BENCH_r03 — see assign_probe_matmul);
-        # the exact-oracle gate form keeps the literal HOF arithmetic.
-        # ap feeds BOTH the index side and the probe side of the cid
-        # self-join — with no cross-branch CSE the |corpus| x |C| Arrow
-        # matmul pass would replay once per branch; checkpoint it
-        # (optimization r10, guide §2.4)
-        ap = (
-            assign_probe_matmul(e, cents, nprobe)
-            .withColumn("nrm", norm(F.col("embedding")))
-            .localCheckpoint(eager=False)
-        )
-        assigned = ap.select("vec_id", "embedding", "nrm", "cid")
-        probes = ap.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            F.explode("probe_cids").alias("cid"),
-        )
-    else:
-        e = e.withColumn("nrm", norm(F.col("embedding")))
-        # ONE |corpus| x |C| centroid-sims pass for BOTH sides of the
-        # cid self-join (optimization r10, guide §2.4): the former form
-        # ran the argmax fold (assignment) AND the array_sort (probe
-        # list) as separate corpus-wide HOF passes, one per join branch.
-        # The sorted top-nprobe slice subsumes the argmax: comparator
-        # (csim desc, cid asc) puts the max-csim / smallest-cid struct
-        # FIRST, exactly the strict-> fold's tie rule and the oracle's
-        # row_number(ORDER BY csim DESC, cid ASC) — so element 1 IS the
-        # assignment and nprobe >= 1 always holds. Checkpointed so the
-        # heavy sims pass executes once; only nprobe structs per row
-        # materialize, never the full |C| array.
-        probe_arr = F.expr(
-            f"""slice(array_sort({_centroid_sims_sql(cents, 'embedding')},
-                  (l, r) -> CASE WHEN l.csim > r.csim THEN -1
-                                 WHEN l.csim < r.csim THEN 1
-                                 WHEN l.cid < r.cid THEN -1
-                                 WHEN l.cid > r.cid THEN 1
-                                 ELSE 0 END),
-                1, {int(nprobe)})"""
-        )
-        base = e.select(
-            "vec_id", "embedding", "nrm", probe_arr.alias("probe_cs")
-        ).localCheckpoint(eager=False)
-        assigned = base.select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            F.expr("element_at(probe_cs, 1).cid").alias("cid"),
-        )
-        probes = base.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("nrm").alias("q_nrm"),
-            F.explode("probe_cs").alias("pr"),
-        ).select("query_id", "q_emb", "q_nrm", F.col("pr.cid").alias("cid"))
+    e = widen(e0, 8).withColumn("nrm", norm(F.col("embedding")))
+    # ONE |corpus| x |C| centroid-sims pass for BOTH sides of the
+    # cid self-join (optimization r10, guide §2.4): the former form
+    # ran the argmax fold (assignment) AND the array_sort (probe
+    # list) as separate corpus-wide HOF passes, one per join branch.
+    # The sorted top-nprobe slice subsumes the argmax: comparator
+    # (csim desc, cid asc) puts the max-csim / smallest-cid struct
+    # FIRST, exactly the strict-> fold's tie rule and the oracle's
+    # row_number(ORDER BY csim DESC, cid ASC) — so element 1 IS the
+    # assignment and nprobe >= 1 always holds. Checkpointed so the
+    # heavy sims pass executes once; only nprobe structs per row
+    # materialize, never the full |C| array.
+    probe_arr = F.expr(
+        f"""slice(array_sort({_centroid_sims_sql(cents, 'embedding')},
+              (l, r) -> CASE WHEN l.csim > r.csim THEN -1
+                             WHEN l.csim < r.csim THEN 1
+                             WHEN l.cid < r.cid THEN -1
+                             WHEN l.cid > r.cid THEN 1
+                             ELSE 0 END),
+            1, {int(nprobe)})"""
+    )
+    base = e.select(
+        "vec_id", "embedding", "nrm", probe_arr.alias("probe_cs")
+    ).localCheckpoint(eager=False)
+    assigned = base.select(
+        "vec_id",
+        "embedding",
+        "nrm",
+        F.expr("element_at(probe_cs, 1).cid").alias("cid"),
+    )
+    probes = base.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        F.explode("probe_cs").alias("pr"),
+    ).select("query_id", "q_emb", "q_nrm", F.col("pr.cid").alias("cid"))
     cands = probes.join(assigned, "cid").where(F.col("vec_id") != F.col("query_id"))
     scored = cands.select(
         "query_id",
@@ -984,7 +874,6 @@ def ann_ivf_topk(
     nprobe: int = 5,
     n_max_centroids: int = 512,
     refine_iters: int = 0,
-    assign_via: str = "matmul",
     cents: list[tuple[int, list[float]]] | None = None,
     assigned: DataFrame | None = None,
     corpus: DataFrame | None = None,
@@ -1009,16 +898,10 @@ def ann_ivf_topk(
 
     ``n_max_centroids`` caps the literal table like a real IVF nlist —
     an index constant, not data-proportional, so the plan stays bounded
-    as the corpus grows. Assignment defaults to ``assign_via='matmul'``
-    — the ``assign_centroids_matmul`` mapInPandas BLAS path (same
-    closure-broadcast shape as ``cosine_topk_matmul``): Catalyst HOFs
-    are interpreted per array element, so the |corpus|x|C|x|dim| argmax
-    is exactly the shape BLAS wins (A/B at sf0.1, 100 centroids: 1.0s
-    literal vs 0.6s matmul; the gap widens with |C|). The pure-JVM
-    ``assign_via='literal'`` HOF argmax is kept for deployments that
-    must avoid Python workers, and as the parity oracle for the BLAS
-    path (tests pin identical assignments). Probes stay on the literal
-    path either way because the query subset is bounded.
+    as the corpus grows. Assignment is the pure-JVM HOF argmax
+    (``_nearest_centroid``): its sequential arithmetic is bit-equal to
+    DuckDB's list_cosine_similarity, so no Python worker runs and a
+    near-tied argmax resolves as in the oracle (``duckdb_ivf_knn_sql``).
 
     ``refine_iters`` > 0 runs that many Lloyd iterations over the seed
     centroids (``refine_centroids``) before indexing — better-balanced
@@ -1040,16 +923,12 @@ def ann_ivf_topk(
     if refine_iters:
         cents = refine_centroids(e, cents, iters=refine_iters)
     if assigned is None:
-        if assign_via == "matmul":
-            assigned = assign_centroids_matmul(e, cents)
-        else:
-            best = _nearest_centroid(cents, "embedding")
-            assigned = e.select(
-                "vec_id", "embedding", best["cid"].alias("cid")
-            )
+        best = _nearest_centroid(cents, "embedding")
         # candidate-side norm precomputed once per vector
         # (see _sim_from_dot)
-        assigned = assigned.withColumn("nrm", norm(F.col("embedding")))
+        assigned = e.select(
+            "vec_id", "embedding", best["cid"].alias("cid")
+        ).withColumn("nrm", norm(F.col("embedding")))
     # else: a sweep passed a prebuilt (vec_id, embedding, cid, nrm)
     # index relation — nprobe is a query-side knob, so sharing the
     # assignment across probe widths is value-identical by definition
@@ -1517,7 +1396,6 @@ def behavioral_similarity(
     centroid_every: int = 25,
     n_max_centroids: int = 256,
     nprobe: int = 2,
-    assign_via: str = "literal",
 ) -> DataFrame:
     """Time-series similarity search over activity profiles: for each
     user, the top-k users with the most similar daily event-count
@@ -1545,17 +1423,12 @@ def behavioral_similarity(
     # 2.4s -> ~1.5s; same lineage-truncation idiom as
     # dedup.connected_components)
     profiles = user_profile_vectors(events).localCheckpoint(eager=False)
-    # assign_via defaults to 'literal' HERE (unlike ivf_knn_graph):
-    # the integer-count profiles make the literal HOF arithmetic exact
-    # end-to-end, which is this operator's oracle contract; pass
-    # 'matmul' for the BLAS bench/scale variant.
     out = ivf_knn_graph(
         profiles,
         k=k,
         centroid_every=centroid_every,
         n_max_centroids=n_max_centroids,
         nprobe=nprobe,
-        assign_via=assign_via,
     )
     return out.select(
         F.col("query_id").alias("user_id"),
@@ -2779,7 +2652,6 @@ def semdedup_prune(
     iters: int = 2,
     tau_num: int = 7,
     tau_den: int = 20,
-    pair_via: str = "fold",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication"): cluster the
@@ -2809,17 +2681,8 @@ def semdedup_prune(
     ~corpus/k); the pair relation never leaves the cluster key, so the
     shuffle is cluster-bucketed. For 100 TB, k grows with the corpus so
     cluster cardinality stays bounded — the knob the paper's recipe
-    sets.
-
-    ``pair_via``: 'fold' runs the per-pair dot as a fused zip_with fold
-    (pure Catalyst, the gate path); 'matmul' runs one Arrow-batched
-    int64 Gram matmul per cluster group (applyInPandas). UNLIKE the
-    float BLAS variants elsewhere, matmul here is bit-EQUAL to the
-    fold, not approximately equal: every product and partial sum is an
-    integer below 2^53, so float64/int64 accumulation order cannot
-    round — pinned in tests/test_similarity_paths.py. It is a bench
-    default candidate (A/B: 5.9s -> sub-second pair stage at sf0.1);
-    'fold' stays the registered gate form by convention."""
+    sets. The per-pair dot is a fused zip_with fold over the int8
+    codes — pure Catalyst, no Python worker."""
     # ONE quantization pass shared with the Lloyd rounds (optimization
     # r10, guide §2.4 — the silhouette_eval discipline)
     coded = (
@@ -2852,55 +2715,25 @@ def semdedup_prune(
         F.col("codes").alias("cb"),
         F.col("n2").alias("nb2"),
     )
-    if pair_via == "matmul":
-        import pandas as pd
-
-        td2, tn2 = tau_den * tau_den, tau_num * tau_num
-
-        def gram(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            import numpy as np
-
-            pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-            x = np.asarray(list(pdf["codes"]), dtype=np.int64)
-            n2 = np.asarray(pdf["n2"], dtype=np.int64)
-            d = x @ x.T  # exact: every partial sum < 2^53
-            ia, ib = np.triu_indices(len(pdf), k=1)
-            keep = (d[ia, ib] > 0) & (
-                td2 * d[ia, ib] * d[ia, ib] >= tn2 * n2[ia] * n2[ib]
-            )
-            return pd.DataFrame(
-                {
-                    "cluster": np.full(
-                        int(keep.sum()), pdf["cluster"].iat[0]
-                    ),
-                    "va": pdf["vec_id"].to_numpy()[ia[keep]],
-                    "vb": pdf["vec_id"].to_numpy()[ib[keep]],
-                }
-            )
-
-        pairs = m.groupBy("cluster").applyInPandas(
-            gram, "cluster int, va long, vb long"
-        )
-    else:
-        dot = F.aggregate(
-            F.zip_with(
-                "ca", "cb", lambda x, y: x.cast("long") * y.cast("long")
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        pairs = (
-            a.join(b, "cluster")
-            .where(F.col("va") < F.col("vb"))
-            .select("cluster", "va", "vb", dot.alias("dot"), "na2", "nb2")
-            .where(
-                (F.col("dot") > 0)
-                & (
-                    F.lit(tau_den * tau_den) * F.col("dot") * F.col("dot")
-                    >= F.lit(tau_num * tau_num) * F.col("na2") * F.col("nb2")
-                )
+    dot = F.aggregate(
+        F.zip_with(
+            "ca", "cb", lambda x, y: x.cast("long") * y.cast("long")
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    pairs = (
+        a.join(b, "cluster")
+        .where(F.col("va") < F.col("vb"))
+        .select("cluster", "va", "vb", dot.alias("dot"), "na2", "nb2")
+        .where(
+            (F.col("dot") > 0)
+            & (
+                F.lit(tau_den * tau_den) * F.col("dot") * F.col("dot")
+                >= F.lit(tau_num * tau_num) * F.col("na2") * F.col("nb2")
             )
         )
+    )
     pruned = pairs.groupBy("cluster").agg(
         F.count(F.lit(1)).cast("long").alias("n_dup_pairs"),
         F.count_distinct("vb").cast("long").alias("n_pruned"),
@@ -3705,8 +3538,8 @@ def ann_nprobe_sweep(
     Each probe width re-derives the same deterministic centroid set
     (nprobe is a QUERY-side knob — a production sweep reuses one built
     index; in-plan the rebuild is the bounded centroid collect, not a
-    corpus pass). ``assign_via='literal'`` keeps the sequential HOF
-    dots bit-equal to the oracle's list arithmetic. Integer counts,
+    corpus pass). The HOF argmax assignment keeps the sequential dots
+    bit-equal to the oracle's list arithmetic. Integer counts,
     one division per row; the exact side is lazily checkpointed (it
     feeds every probe width's join — no cross-branch CSE otherwise).
     ``exact``/``cents`` accept a precomputed brute-force top-k relation

@@ -52,14 +52,12 @@ class LshIngest:
         store_dir: str,
         n: int = 3,
         threshold: float = 0.5,
-        hash_impl: str = "xxhash64",
     ):
         self.admitted_dir = os.path.join(store_dir, "admitted")
         self.index_dir = os.path.join(store_dir, "index")
         self.ledger_dir = os.path.join(store_dir, "ledger")
         self.n = n
         self.threshold = threshold
-        self.hash_impl = hash_impl
 
     def _seen(self, batch_id: int) -> bool:
         return os.path.exists(os.path.join(self.ledger_dir, f"{batch_id}.done"))
@@ -87,8 +85,7 @@ class LshIngest:
             index = (
                 spark.read.parquet(self.index_dir)
                 if have_corpus
-                else build_minhash_index(batch.limit(0), n=self.n,
-                                         hash_impl=self.hash_impl)
+                else build_minhash_index(batch.limit(0), n=self.n)
             )
             dup_ids = (
                 minhash_lsh_incremental(
@@ -96,7 +93,6 @@ class LshIngest:
                     corpus,
                     n=self.n,
                     threshold=self.threshold,
-                    hash_impl=self.hash_impl,
                     corpus_index=index,
                 )
                 .select(F.col("new_id").alias("doc_id"))
@@ -104,9 +100,9 @@ class LshIngest:
             )
             admitted = batch.join(dup_ids, "doc_id", "left_anti").persist()
             admitted.write.mode("append").parquet(self.admitted_dir)
-            build_minhash_index(admitted, n=self.n, hash_impl=self.hash_impl).write.mode(
-                "append"
-            ).parquet(self.index_dir)
+            build_minhash_index(admitted, n=self.n).write.mode("append").parquet(
+                self.index_dir
+            )
             admitted.unpersist()
             self._mark(batch_id)
         finally:

@@ -68,43 +68,6 @@ def test_ivf_refined_recall_and_inertia(spark, tables):
     assert inertia(refined) >= inertia(seed) - 1e-9
 
 
-def test_ivf_matmul_assignment_parity_and_recall(tables):
-    """The BLAS scale path for centroid assignment must agree with the
-    literal-HOF path (identical cid per vector, modulo FP near-ties) and
-    must not cost recall."""
-    from pyspark.sql import functions as F
-
-    from pubsub_mapreduce_spark.operators.similarity import (
-        _as_double,
-        _nearest_centroid,
-        assign_centroids_matmul,
-    )
-
-    emb = tables["embeddings"]
-    exact = pairs(cosine_topk(emb, k=5, every=50))
-    got = pairs(ann_ivf_topk(emb, k=5, every=50, assign_via="matmul"))
-    recall = len(exact & got) / len(exact)
-    assert recall >= 0.9, f"matmul-assigned IVF recall {recall:.2f} < 0.9"
-
-    e = _as_double(emb).select("vec_id", "embedding")
-    cents = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in sorted(
-            e.where(F.col("vec_id") % 100 == 0).collect(),
-            key=lambda r: r["vec_id"],
-        )
-    ]
-    lit = e.select(
-        "vec_id", _nearest_centroid(cents, "embedding")["cid"].alias("cid")
-    )
-    mm = assign_centroids_matmul(e, cents).select("vec_id", "cid")
-    n = e.count()
-    agree = lit.join(mm.withColumnRenamed("cid", "cid2"), "vec_id").where(
-        F.col("cid") == F.col("cid2")
-    ).count()
-    assert agree / n >= 0.99, f"assignment agreement {agree}/{n} < 99%"
-
-
 def test_knn_graph_matmul_exact_and_lsh_floor(spark, tables):
     """Corpus-wide kNN at every=1: the blocked BLAS matmul kernel must
     EQUAL the exact HOF top-k pair-for-pair (it remains the exact

@@ -410,6 +410,21 @@ def test_user_similarity_plan(spark):
     assert node_count(df, "BroadcastNestedLoopJoin") <= 2
 
 
+def test_ivf_queries_assign_in_the_jvm(spark, monkeypatch):
+    """Every registered query that composes an IVF index assigns cells
+    with the HOF argmax, whose arithmetic is bit-equal to the DuckDB
+    twin's: no Python evaluation node anywhere in its lineage. A
+    checkpointed relation shows only as a scan of its RDD, so
+    checkpoints are inlined while the plans are built."""
+    monkeypatch.setattr(
+        type(spark.range(1)), "localCheckpoint", lambda self, *a, **kw: self
+    )
+    for name in ["knn_graph", "sim_ann_ivf", "ann_eval", "user_similarity"]:
+        df = q(name, spark)
+        for node in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas"]:
+            assert node_count(df, node) == 0, (name, node)
+
+
 def test_decontaminate_broadcast_semi_shape(spark):
     """Decontamination: the benchmark gram set rides a broadcast; the
     corpus side never shuffles its text — the only keyed exchanges are

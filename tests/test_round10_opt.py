@@ -195,9 +195,7 @@ def test_dedup_recall_report_shared_shingles(spark):
     }
     approx = {
         (r["a"], r["b"])
-        for r in dedup.minhash_lsh_pairs(
-            docs, n=3, threshold=0.5, hash_impl="md5"
-        )
+        for r in dedup.minhash_lsh_pairs(docs, n=3, threshold=0.5)
         .select("a", "b")
         .collect()
     }

@@ -6,6 +6,7 @@ sanity, and vocabulary coverage monotonicity."""
 from __future__ import annotations
 
 import datetime
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -16,6 +17,8 @@ from pubsub_mapreduce_spark.operators.graph import (
     copurchase_edges,
     label_propagation,
 )
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _events(spark, rows):
@@ -557,7 +560,7 @@ def test_leakproof_split_keeps_clusters_together(spark, tables):
 
     docs = tables["documents"]
     assigned = leakproof_split(docs)
-    pairs = minhash_lsh_pairs(docs, n=3, threshold=0.5, hash_impl="md5")
+    pairs = minhash_lsh_pairs(docs, n=3, threshold=0.5)
     a = assigned.select(
         F.col("doc_id").alias("a"), F.col("split").alias("split_a")
     )
@@ -656,7 +659,8 @@ def test_gate_window_ordering_contract():
     # window head must be spent on never-checked names only
     checked = set()
     for r in (1, 2, 3, 4, 5, 6, 7, 8):
-        checked |= set(json.load(open(f"/root/repo/CORRECTNESS_r0{r}.json")))
+        with open(REPO / f"CORRECTNESS_r0{r}.json") as f:
+            checked |= set(json.load(f))
     assert [n for n in names[: nq + len(fill)] if n in checked] == []
     # every registered oracle still has a queries() twin
     assert not set(entrymod.oracle_sql()) - set(names)
@@ -677,7 +681,8 @@ def test_every_registered_query_driver_checked_or_in_window():
     names = list(entrymod.queries())
     checked = set()
     for r in (1, 2, 3, 4, 5, 6, 7, 8):
-        checked |= set(json.load(open(f"/root/repo/CORRECTNESS_r0{r}.json")))
+        with open(REPO / f"CORRECTNESS_r0{r}.json") as f:
+            checked |= set(json.load(f))
     debt = [n for n in names if n not in checked and n not in names[:50]]
     assert debt == entrymod.R10_QUEUE, (
         "registered but neither driver-checked nor in the gate window "

@@ -672,7 +672,7 @@ def test_bits_sweep_bit_identical_to_standalone_lsh_topk(spark):
 
 def test_nprobe_sweep_bit_identical_to_standalone_ivf_topk(spark):
     """Same pin for the shared-assignment nprobe sweep vs per-width
-    ann_ivf_topk(assign_via='literal')."""
+    ann_ivf_topk."""
     from pubsub_mapreduce_spark.io import load_tables
     from pubsub_mapreduce_spark.operators.similarity import (
         ann_ivf_topk,
@@ -689,9 +689,7 @@ def test_nprobe_sweep_bit_identical_to_standalone_ivf_topk(spark):
     for p in (1, 2, 4):
         approx = {
             (r.query_id, r.neighbor_id)
-            for r in ann_ivf_topk(
-                emb, k=5, every=50, nprobe=p, assign_via="literal"
-            ).collect()
+            for r in ann_ivf_topk(emb, k=5, every=50, nprobe=p).collect()
         }
         assert got[p].n_matched == len(approx & exact), f"nprobe={p}"
 

@@ -27,21 +27,6 @@ def test_matmul_topk_matches_hof(tables):
         assert abs(s_mat - s_hof) < 1e-9, (key, s_hof, s_mat)
 
 
-def test_ivf_knn_graph_blas_matches_literal(tables):
-    """The bench/production BLAS assign+probe path of ivf_knn_graph
-    (assign_probe_matmul) must produce the same graph as the literal
-    HOF gate form on the fixture — same cells, same probes, same
-    neighbors (BLAS may only diverge on near-tied argmaxes, which the
-    fixture does not contain)."""
-    from pubsub_mapreduce_spark.operators.similarity import ivf_knn_graph
-
-    emb = tables["embeddings"]
-    kw = dict(k=3, centroid_every=100, n_max_centroids=512, nprobe=2)
-    lit = sorted(map(tuple, ivf_knn_graph(emb, assign_via="literal", **kw).collect()))
-    mat = sorted(map(tuple, ivf_knn_graph(emb, assign_via="matmul", **kw).collect()))
-    assert lit == mat and len(lit) > 0
-
-
 def test_quantize_embeddings_quality(spark, tables):
     """int8 quantization contract: per-vector max reconstruction error
     <= scale/2 by construction, and cosine(x, dequant(x)) >= 0.995 —
@@ -107,17 +92,3 @@ def test_pca_invariants(spark, tables):
     rep = pca_variance_report(emb, k=4).collect()
     cums = [r["cumulative"] for r in rep]
     assert cums == sorted(cums) and cums[-1] <= 1.0 + 1e-12
-
-
-def test_semdedup_matmul_is_bit_equal_to_fold(tables):
-    """The int64 Gram matmul pair stage is BIT-equal to the zip_with
-    fold (integer dots — no float rounding anywhere), so the matmul
-    form is output-identical, not merely rank-identical."""
-    from pubsub_mapreduce_spark.operators.similarity import semdedup_prune
-
-    emb = tables["embeddings"]
-    fold = sorted(map(tuple, semdedup_prune(emb).collect()))
-    mat = sorted(
-        map(tuple, semdedup_prune(emb, pair_via="matmul").collect())
-    )
-    assert fold == mat

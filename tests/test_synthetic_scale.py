@@ -479,9 +479,7 @@ def test_cross_source_dups_at_scale_tracks_lsh_bound(spark, big_docs):
     assert set(planted) >= set(range(15))
     for r in planted.values():
         assert r["source_a"] != r["source_b"]
-    n_pairs = minhash_lsh_pairs(
-        corpus, threshold=0.6, hash_impl="md5"
-    ).count()
+    n_pairs = minhash_lsh_pairs(corpus, threshold=0.6).count()
     assert out.count() <= n_pairs
 
 

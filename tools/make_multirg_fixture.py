@@ -7,15 +7,14 @@ every query runs single-threaded regardless of cores — the measured
 root cause of the flat 8-vs-32-core scaling ratios (the plans
 parallelize; the local fixture can't). This tool rewrites each table as
 N files (row-preserving, deterministic order column untouched) into a
-sibling directory; point the bench at it for scaling studies:
+sibling directory; point the profiler at it for scaling studies:
 
-  python tools/make_multirg_fixture.py /root/testdata/sf0.1 /root/testdata/sf0.1-multi8 8
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1-multi8 python bench.py
+  python tools/make_multirg_fixture.py SF_DIR OUT_DIR 8
+  SPARK_GRAFT_SF_DIR=OUT_DIR python tools/profile_query.py NAME...
 
-NEVER use the variant for oracle or driver-comparable bench runs — the
-driver's numbers are defined on the single-file fixtures; this exists
-only so core-scaling measurements reflect plan quality instead of the
-fixture's layout.
+NEVER use the variant for oracle or timing runs meant to compare with
+the single-file fixtures; it exists only so core-scaling measurements
+reflect plan quality instead of the fixture's layout.
 """
 
 from __future__ import annotations

@@ -8,10 +8,9 @@ oracle-paired query at a bigger SF. Run:
     python tools/oracle_sweep.py [/root/testdata/sf0.1] [SWEEP_out.txt]
 
 Per-query MATCH/MISMATCH/ERROR lines plus totals are written to the
-output file (default ``SWEEP_LOCAL.txt``) — committed per round as
-``SWEEP_r{N}.txt`` so the sweep result is a diffable artifact, not a
-docstring claim. Spark progress bars pollute stdout, so stdout carries
-only coarse progress; the file is the record.
+output file (default ``SWEEP_LOCAL.txt``), so the sweep result is a
+diffable artifact, not a docstring claim. Spark progress bars pollute
+stdout, so stdout carries only coarse progress; the file is the record.
 """
 
 import sys

@@ -15,11 +15,11 @@ computed once per consumer (``plans.explain.repeated_exchanges``),
 broadcast joins, ``scans`` counts parquet scan nodes (a query that
 re-scans a table it already aggregated shows up here), ``cartesian``
 flags CartesianProduct nodes, and ``codegen`` counts fused
-whole-stage spans. Committed per round as ``PLANS_r{N}.txt`` so plan
+whole-stage spans. Two runs' outputs diff line by line, so plan
 regressions (an operator silently gaining a shuffle or losing a
 broadcast) diff like correctness regressions. Run:
 
-    python tools/plan_audit.py [/root/testdata/sf0.001] [PLANS_out.txt]
+    python tools/plan_audit.py [SF_DIR] [PLANS_LOCAL.txt]
 """
 
 import re

@@ -1,12 +1,13 @@
-"""Round-9 profiling helper: time declared queries in isolation and dump
-their formatted plans (guide §1: measure first, noop sink, labeled jobs).
+"""Profiling helper: time declared queries in isolation and dump their
+formatted plans (measure first, noop sink, labeled jobs).
 
 Usage:
-  python tools/profile_query.py [--reps N] [--suffix before] [--plans-dir plans/r09] name...
-  python tools/profile_query.py --top 40            # 40 most expensive from BENCH_LOCAL.json
+  python tools/profile_query.py [--reps N] [--suffix before --plans-dir DIR] name...
 
-Prints one JSON line {"name": {"min": s, "times": [...]}} per query plus a
-total. Plans go to <plans-dir>/<name>_<suffix>.txt when --suffix is given.
+Reads the fixture directory named by ``SPARK_GRAFT_SF_DIR`` (default
+sf0.1). Prints one JSON line {"name": {"min": s, "times": [...]}} per
+query plus a total. Plans go to <plans-dir>/<name>_<suffix>.txt when
+--suffix is given; --suffix requires --plans-dir.
 """
 
 from __future__ import annotations
@@ -30,13 +31,14 @@ def force(df) -> None:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="*")
+    ap.add_argument("names", nargs="+")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--suffix", default=None)
-    ap.add_argument("--plans-dir", default=os.path.join(HERE, "plans", "r09"))
-    ap.add_argument("--top", type=int, default=0)
+    ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--no-warm", action="store_true")
     args = ap.parse_args()
+    if args.suffix and not args.plans_dir:
+        ap.error("--suffix requires --plans-dir")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
@@ -46,23 +48,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
 
-    names = list(args.names)
-    if args.top:
-        with open(os.path.join(HERE, "BENCH_LOCAL.json")) as f:
-            doc = json.load(f)
-        names += [
-            k
-            for k, _ in sorted(
-                doc["queries"].items(), key=lambda kv: -kv[1]
-            )[: args.top]
-            if k not in names
-        ]
-
     if not args.no_warm:
         force(queries["q5_revenue_by_nation"](spark, sf_dir))
 
     out = {}
-    for name in names:
+    for name in args.names:
         fn = queries[name]
         if args.suffix:
             os.makedirs(args.plans_dir, exist_ok=True)
