@@ -5,45 +5,36 @@ K2 (reducer.go:91-133): base64(JSON) pushed to a device config endpoint,
 retried up to 10x with 100ms backoff, skippable via a flag. Here the
 endpoint is injectable (tests pass a recording callable); the retry
 loop, encoding, and skip toggle are faithful.
+
+The payload is built on the driver: the sink collects the batch's
+(id, value) rows once (at most keys x windows of them) and encodes
+them in Python, so a micro-batch runs one Spark job, not a second
+global aggregate just to densify a handful of rows. Re-densification
+to the array shape happens here at the wire edge only (SURVEY.md
+section 1.4).
 """
 
 from __future__ import annotations
 
+import base64
+import json
 import time
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MAX_RETRIES = 10  # reducer.go:24
 RETRY_WAIT_S = 0.1  # reducer.go:25
 
 
-def encode_device_config(df: DataFrame, value_col: str = "cnt") -> DataFrame:
-    """The K2 wire format: base64(JSON({mps, total})) (reducer.go:101-111).
-    Input: long-format (id, <value_col>) rows — ``cnt`` from the rate
-    stream or ``total`` from the running-total stream; output: one
-    payload row. Re-densification to the array shape happens here at the
-    wire edge only (SURVEY.md section 1.4)."""
-    pairs = df.agg(
-        F.array_sort(F.collect_list(F.struct("id", value_col))).alias("p"),
-        F.sum(value_col).alias("total"),
-    )
-    # a global agg over an empty batch still yields one row (null total);
-    # map it to a null payload so the sink's idle suppression fires
-    return pairs.select(
-        F.when(
-            F.col("total").isNotNull(),
-            F.base64(
-                F.to_json(
-                    F.struct(
-                        F.transform("p", lambda s: s[value_col]).alias("mps"),
-                        F.col("total"),
-                    )
-                ).cast("binary")
-            ),
-        ).alias("payload")
-    )
+def _encode(rows: list[tuple]) -> str:
+    """The K2 wire format (reducer.go:101-111): base64(JSON({mps, total}))
+    over (id, value) rows sorted by id, then value. Standard base64 on
+    one line, as Go's ``encoding/base64`` writes it; Spark's ``base64`` would
+    break payloads over 57 JSON bytes into CRLF-separated lines."""
+    mps = [v for _, v in rows]
+    body = json.dumps({"mps": mps, "total": sum(mps)}, separators=(",", ":"))
+    return base64.b64encode(body.encode()).decode("ascii")
 
 
 class DeviceConfigSink:
@@ -100,10 +91,10 @@ class DeviceConfigSink:
             return
         if self._committed(batch_id):
             return  # replayed batch after restart: side effect already done
-        rows = encode_device_config(batch_df, self.value_col).collect()
-        if not rows or rows[0]["payload"] is None:
+        rows = sorted(batch_df.select("id", self.value_col).collect())
+        if not rows:
             return  # empty batch: nothing to push (T8 idle suppression)
-        payload = rows[0]["payload"]
+        payload = _encode(rows)
         if payload == self._last_payload:
             return  # T8: unchanged -> no push
         last_err: Exception | None = None

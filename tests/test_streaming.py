@@ -433,6 +433,9 @@ def test_streaming_throughput_exceeds_local_baseline(spark, tmp_path):
     assert total == 200 * 5 * 1000
     rate = total / wall
     assert rate >= 10_000, f"streaming replay at {rate:.0f} msgs/s < 10k baseline"
+
+
+def test_device_config_sink_retry_and_suppression(spark):
     """K2 + T8: bounded retry then success; unchanged payload suppressed;
     empty batch suppressed; skip flag bypasses everything."""
     df = spark.createDataFrame([(0, 10), (1, 20)], "id long, cnt long")
@@ -696,6 +699,202 @@ def test_device_config_sink_ledger_makes_replay_idempotent(spark, tmp_path):
     u2 = DeviceConfigSink(push=pushes2.append)
     u2(batch, batch_id=41)
     assert len(pushes2) == 2
+
+
+def test_checkpoint_file_manager_is_filesystem_api_and_keeps_checksums(spark, tmp_path):
+    """The session's checkpoint I/O goes through Hadoop's FileSystem API
+    (atomic ``rename(2)`` on ``file://``, no ``readlink`` fork per
+    rename), and the state store still writes its checksum files beside
+    every delta: Spark's ``1.delta.crc`` and Hadoop's ``.1.delta.crc``."""
+    import os
+
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(f"file://{tmp_path}"),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    knob_batch(spark, n=10, ticks=5, tick_ms=200).coalesce(1).write.parquet(src)
+    counted = windowed_count_stream(
+        read_knob_stream(spark, src), window="100 milliseconds"
+    )
+    q = (
+        counted.writeStream.outputMode("update")
+        .format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    files = set(os.listdir(os.path.join(ckpt, "state", "0", "0")))
+    assert {"1.delta", "1.delta.crc", ".1.delta.crc"} <= files
+
+
+def test_device_config_sink_payloads_byte_identical(spark):
+    """The driver-side encoder pushes the exact strings the former
+    Spark-side encoder (``array_sort(collect_list(struct(id, value)))``
+    then ``base64(to_json(...))``) produced for the same batches: ids in
+    order, ties on an id ordered by value, the ``total`` column, and no
+    push for an empty batch. Longer payloads are not split into lines."""
+    import base64
+    import json
+
+    shapes = [
+        # two ids in one window, arriving out of id order
+        (
+            [("2024-01-01 00:00:00", 1, 7), ("2024-01-01 00:00:00", 0, 5)],
+            "window_start string, id int, cnt long",
+            "cnt",
+            ["eyJtcHMiOls1LDddLCJ0b3RhbCI6MTJ9"],
+        ),
+        # one id in two windows: the tie on id is ordered by value
+        (
+            [("2024-01-01 00:00:00.1", 3, 9), ("2024-01-01 00:00:00", 3, 4)],
+            "window_start string, id int, cnt long",
+            "cnt",
+            ["eyJtcHMiOls0LDldLCJ0b3RhbCI6MTN9"],
+        ),
+        # fed by running_total_stream
+        (
+            [(2, 30), (0, 10), (1, 20)],
+            "id long, total long",
+            "total",
+            ["eyJtcHMiOlsxMCwyMCwzMF0sInRvdGFsIjo2MH0="],
+        ),
+        ([], "id long, cnt long", "cnt", []),
+    ]
+    for rows, schema, value_col, want in shapes:
+        pushes: list[str] = []
+        DeviceConfigSink(pushes.append, value_col=value_col)(
+            spark.createDataFrame(rows, schema), 0
+        )
+        assert pushes == want, (rows, value_col)
+
+    # a long payload stays on one line, as Go's encoding/base64 writes it
+    pushes = []
+    DeviceConfigSink(pushes.append)(
+        spark.createDataFrame(
+            [(i % 5, 20000 + i) for i in range(60)], "id long, cnt long"
+        ),
+        0,
+    )
+    mps = sorted(range(20000, 20060), key=lambda c: ((c - 20000) % 5, c))
+    assert "\n" not in pushes[0]
+    assert json.loads(base64.b64decode(pushes[0])) == {"mps": mps, "total": sum(mps)}
+
+
+def test_topology_restart_with_sink_ledger_pushes_each_batch_once(spark, tmp_path):
+    """The paper's topology (FileTopic -> parse -> scale -> fan-out ->
+    100 ms count -> DeviceConfigSink) on a processing-time trigger is
+    crashed mid-stream right after a push, before Spark commits that
+    batch. More ticks are published, and it restarts from the same
+    checkpoint and sink ledger. Spark replays the uncommitted batch under
+    the same id; the ledger turns its push into a no-op. Every knob of
+    every tick is counted exactly once across both runs, and no batch id
+    is pushed twice."""
+    import base64
+    import json
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pubsub_mapreduce_spark.sources.knobs import parse_knob_messages
+
+    topic_dir = str(tmp_path / "topic")
+    ckpt = str(tmp_path / "ckpt")
+    ledger = str(tmp_path / "ledger")
+    os.makedirs(topic_dir)
+    t0 = 1_704_067_200.05  # ticks sit mid-window
+
+    def n_of(k):
+        return 50 + 5 * k  # quota 10 + k: every batch's payload differs
+
+    def publish(ticks):
+        for k in ticks:
+            lines = [
+                json.dumps({"id": i, "n": n_of(k), "ts": t0 + 0.2 * k})
+                for i in range(TOTAL_KNOBS)
+            ]
+            if k % 4 == 1:
+                lines.append("not json")  # poison: dropped, never fatal
+            tmp = os.path.join(topic_dir, f".tick-{k:04d}.parquet")
+            pq.write_table(pa.table({"value": lines}), tmp)
+            os.rename(tmp, os.path.join(topic_dir, f"tick-{k:04d}.parquet"))
+
+    delivered: list[tuple[int, list]] = []  # (batch id, rows) per sink call
+    pushes: list[tuple[int, str]] = []  # (batch id, payload)
+
+    def start(crash_after_push: int | None = None):
+        current = {"bid": None}
+        sink = DeviceConfigSink(
+            push=lambda p: pushes.append((current["bid"], p)), ledger_dir=ledger
+        )
+
+        def run_batch(batch_df, batch_id):
+            rows = batch_df.select("window_start", "id", "cnt").collect()
+            delivered.append((batch_id, rows))
+            current["bid"] = batch_id
+            sink(batch_df, batch_id)
+            if len(pushes) == crash_after_push:
+                raise RuntimeError("simulated crash after the push")
+
+        raw = FileTopic(topic_dir).subscribe(
+            spark, "value string", max_files_per_trigger=2
+        )
+        counts = windowed_count_stream(
+            fan_out_stream(snapshot_scale_stream(parse_knob_messages(raw), delta=0.2)),
+            window="100 milliseconds",
+        )
+        return (
+            counts.writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="200 milliseconds")
+            .foreachBatch(run_batch)
+            .start()
+        )
+
+    publish(range(10))
+    q = start(crash_after_push=2)
+    deadline = time.monotonic() + 60
+    while q.isActive and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert not q.isActive and q.exception() is not None, "run 1 did not crash"
+    crashed = pushes[-1][0]
+    first_run = len(delivered)
+
+    publish(range(10, 20))
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    replayed = [bid for bid, _ in delivered[first_run:]]
+    assert replayed[0] == crashed, "the uncommitted batch was not replayed"
+    pushed_ids = [bid for bid, _ in pushes]
+    assert len(pushed_ids) == len(set(pushed_ids)), f"pushed twice: {pushed_ids}"
+
+    # update mode: the last emit per (window, knob) is its count
+    final = {}
+    for _, rows in delivered:
+        for r in rows:
+            final[(r["window_start"], r["id"])] = r["cnt"]
+    quotas = [n_of(k) // 5 for k in range(20) for _ in range(TOTAL_KNOBS)]
+    assert sorted(final.values()) == sorted(quotas)
+    assert sum(final.values()) == sum(quotas)
+    # every batch that carried rows reached the device once
+    with_rows = {bid for bid, rows in delivered if rows}
+    assert set(pushed_ids) == with_rows
+    for bid, payload in pushes:
+        body = json.loads(base64.b64decode(payload))
+        rows = next(rows for b, rows in delivered if b == bid)
+        assert body["total"] == sum(r["cnt"] for r in rows)
 
 
 def test_funnel_stream_matches_greedy_batch_reference(spark, tmp_path):
