@@ -44,6 +44,14 @@ def get_spark(
       ``file://`` is ``rename(2)``, which is atomic, and the checkpoint
       holds the same files, checksum files included. ``extra_conf``
       overrides this default, as it overrides every other one.
+    - A read of up to 1024 root paths lists them on the driver (Spark's
+      threshold is 32). A file-stream micro-batch builds a file index
+      over every file it picked up, and above the threshold Spark lists
+      them with a distributed job of one task per path. Under the
+      ``local[...]`` masters this package runs on, those tasks each stat
+      one local file on the driver's own cores, and the job cost a knob
+      drain batch of 40 files a quarter to half a second. ``extra_conf``
+      overrides this too.
     """
     # Before the JVM launches: make google.protobuf importable from
     # the container's Cloud-SDK copy if no wheel is installed, so the
@@ -79,6 +87,7 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -58,6 +58,8 @@ GATE_SLOW_TESTS = {
     "test_streaming.py::test_stream_stream_interval_join_matches_batch",
     "test_streaming.py::test_session_agg_stream_equals_batch",
     "test_streaming.py::test_watermark_protects_closed_windows",
+    "test_streaming.py::test_window_start_key_matches_struct_window_key",
+    "test_streaming.py::test_window_start_key_never_closes_earlier_than_struct_key",
     "test_streaming.py::test_running_total_and_rate_invariant",
 }
 

@@ -10,6 +10,8 @@ standing in for the Pub/Sub subscription source (SURVEY.md §2.1 S1).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -50,7 +52,7 @@ def read_knob_stream(spark, path):
 
 def run_foreach_batch(df, writer, output_mode="update"):
     """Drain an availableNow query through foreachBatch, collecting
-    (batch_id, rows) driver-side."""
+    (batch_id, rows) driver-side; returns them and the query."""
     batches: list[tuple[int, list]] = []
 
     def sink(batch_df, batch_id):
@@ -64,7 +66,7 @@ def run_foreach_batch(df, writer, output_mode="update"):
         .start()
     )
     q.awaitTermination(120)
-    return batches
+    return batches, q
 
 
 def final_per_key(batches, key="id"):
@@ -80,7 +82,7 @@ def test_lww_stream_matches_batch(spark, knob_dir):
     """T1 streaming (applyInPandasWithState) converges to the same
     latest-per-key answer as the batch max_by replay."""
     stream = read_knob_stream(spark, knob_dir)
-    batches = run_foreach_batch(latest_per_key_stream(stream), None)
+    batches, _ = run_foreach_batch(latest_per_key_stream(stream), None)
     assert len(batches) >= 4, "expected one micro-batch per input file"
     got = {k: (r["n"], r["ts"]) for k, r in final_per_key(batches).items()}
 
@@ -157,7 +159,7 @@ def test_running_total_and_rate_invariant(spark, knob_dir):
     msgs = fan_out_stream(snapshot_scale_stream(stream, delta=0.2), n="quota")
     per_sec = windowed_count_stream(msgs, window="1 second")
     totals = running_total_stream(msgs, cnt_col=None)
-    batches = run_foreach_batch(totals, None)
+    batches, _ = run_foreach_batch(totals, None)
     got = {k: r["total"] for k, r in final_per_key(batches).items()}
     quota = N_CONST * 2 // 10
     assert got == {k: quota * TICKS for k in range(TOTAL_KNOBS)}
@@ -224,7 +226,7 @@ def test_two_stage_topology_through_topic(spark, tmp_path):
         spark, "window_start timestamp, id long, cnt long", max_files_per_trigger=2
     )
     totals = running_total_stream(stage2, cnt_col="cnt")
-    batches = run_foreach_batch(totals, None)
+    batches, _ = run_foreach_batch(totals, None)
     got = {k: r["total"] for k, r in final_per_key(batches).items()}
     assert got == {k: quota * TICKS for k in range(TOTAL_KNOBS)}
 
@@ -262,6 +264,187 @@ def test_watermark_protects_closed_windows(spark, tmp_path):
     # early windows carry their original counts (ticks 0-4 over 1s
     # windows: 5 then ... never 10 = early+replay merged)
     assert out.agg(F.max("cnt")).first()[0] <= 5
+
+
+T0_MS = 1_704_067_200_000  # 2024-01-01T00:00:00Z, on every window grid
+
+
+def _write_tick_files(spark, src, *files):
+    """One parquet file per entry of ``files``: ticks at the given ms
+    offsets from T0_MS, three knob ids each. File mtimes fix the order
+    in which maxFilesPerTrigger=1 reads them, one per micro-batch."""
+    import glob
+
+    seen: set[str] = set()
+    for i, offsets in enumerate(files):
+        ticks = spark.createDataFrame([(o,) for o in offsets], "off long")
+        ticks.crossJoin(spark.range(3)).select(
+            "id",
+            F.lit(1).cast("long").alias("n"),
+            F.timestamp_millis(F.lit(T0_MS) + F.col("off")).alias("ts"),
+        ).coalesce(1).write.mode("append").parquet(src)
+        (part,) = set(glob.glob(f"{src}/part-*")) - seen
+        seen.add(part)
+        os.utime(part, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _struct_window_count(msgs, window, watermark):
+    """Reference: the same count keyed on the window struct, with the
+    watermark on ``ts``."""
+    return (
+        msgs.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window).alias("w"), F.col("id"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select(F.col("w.start").alias("window_start"), "id", "cnt")
+    )
+
+
+def _run_count(spark, src, count, window, watermark, mode):
+    """(batch_id, sorted rows) per batch and numRowsDroppedByWatermark
+    per batch of one availableNow run of ``count`` over ``src``."""
+    batches, q = run_foreach_batch(
+        count(read_knob_stream(spark, src), window, watermark), None, mode
+    )
+    dropped = {
+        p["batchId"]: p["stateOperators"][0]["numRowsDroppedByWatermark"]
+        for p in q.recentProgress
+    }
+    return sorted((i, sorted(rows)) for i, rows in batches), dropped
+
+
+def test_windowed_count_stream_keys_partial_aggregate_on_primitives(
+    spark, tmp_path
+):
+    """The partial aggregate of windowed_count_stream is keyed on the
+    window start (a timestamp) and the long id, not on a window struct,
+    which lets Spark use its two-level fast hash map."""
+    src = str(tmp_path / "src")
+    _write_tick_files(spark, src, [0, 50, 150])
+    batches, q = run_foreach_batch(
+        windowed_count_stream(read_knob_stream(spark, src)), None
+    )
+    got = sorted(
+        (round(r["window_start"].timestamp() * 1000) - T0_MS, r["id"], r["cnt"])
+        for _, rows in batches
+        for r in rows
+    )
+    assert got == [(0, k, 2) for k in range(3)] + [(100, k, 1) for k in range(3)]
+    plan = q._jsq.explainInternal(False)
+    partial = [ln for ln in plan.splitlines() if "partial_count" in ln]
+    assert len(partial) == 1, plan
+    assert "keys=[window_start#" in partial[0] and ", id#" in partial[0], plan
+    assert "named_struct" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "window, watermark, early, open_tick, close_tick, late",
+    [
+        ("1 second", "2 seconds", [0, 200, 400, 600, 800], 2500, 3000, 500),
+        ("100 milliseconds", "2 seconds", [0, 50], 2050, 2100, 50),
+    ],
+    ids=["1s_2s", "100ms_2s"],
+)
+def test_window_start_key_matches_struct_window_key(
+    spark, tmp_path, window, watermark, early, open_tick, close_tick, late
+):
+    """When the watermark is a whole number of windows, the window-start
+    key with its watermark delayed by one more window closes a window in
+    the same batch as the struct key and drops the same late rows. Each
+    stream sits on the edge of the first window [t0, t0+w): early ticks
+    in it, one later tick, a second copy of that tick, then a late row in
+    the first window. The tick at ``open_tick`` leaves that window open
+    (the late row is counted); the one at ``close_tick`` closes it in the
+    copy's batch (the late row, one batch further, is dropped: Spark
+    checks late rows against the previous batch's watermark). A delay of
+    the watermark alone would close it at ``open_tick`` too. Update and
+    append mode must give the same rows per batch and the same
+    numRowsDroppedByWatermark."""
+    for tick, closes in ((open_tick, False), (close_tick, True)):
+        src = str(tmp_path / f"src_{tick}")
+        _write_tick_files(spark, src, early, [tick], [tick], [late])
+        for mode in ("update", "append"):
+            old, old_dropped = _run_count(
+                spark, src, _struct_window_count, window, watermark, mode
+            )
+            new, new_dropped = _run_count(
+                spark, src, windowed_count_stream, window, watermark, mode
+            )
+            case = (tick, mode)
+            assert new == old, case
+            assert new_dropped == old_dropped, case
+            assert sum(new_dropped.values()) == (3 if closes else 0), case
+            emitted = any(rows for _, rows in new)
+            assert emitted == (closes or mode == "update"), case
+
+
+def test_window_start_key_never_closes_earlier_than_struct_key(spark, tmp_path):
+    """At 100 ms/250 ms the watermark is not a whole number of windows:
+    the window-start key then closes windows and drops late rows no
+    earlier than the struct key. The tick at 380 ms (sent twice, so its
+    watermark is in force before the late row arrives) closes
+    [t0, t0+100ms) under the struct key (watermark 130 ms) but not under
+    the window-start key (watermark 300 - 350 = -50 ms), so the late row
+    at 50 ms is dropped by the one and counted by the other; the tick at
+    1 s closes the window under both."""
+    src = str(tmp_path / "src")
+    _write_tick_files(spark, src, [0, 50], [380], [380], [50], [1000])
+    args = ("100 milliseconds", "250 milliseconds")
+
+    def upto(dropped, b):
+        return sum(v for i, v in dropped.items() if i <= b)
+
+    def closed(batches, b):
+        return {
+            (r["window_start"], r["id"]) for i, rows in batches if i <= b for r in rows
+        }
+
+    for mode in ("update", "append"):
+        old, old_dropped = _run_count(spark, src, _struct_window_count, *args, mode)
+        new, new_dropped = _run_count(spark, src, windowed_count_stream, *args, mode)
+        for b in sorted(old_dropped.keys() | new_dropped.keys()):
+            assert upto(new_dropped, b) <= upto(old_dropped, b), (mode, b)
+            if mode == "append":
+                assert closed(new, b) <= closed(old, b), b
+        assert sum(new_dropped.values()) == 0 < sum(old_dropped.values()), mode
+    # in append mode every window has closed by the final batch
+    assert closed(new, max(new_dropped)) == closed(old, max(old_dropped))
+
+
+def test_file_stream_batch_lists_its_files_without_a_job(spark, tmp_path):
+    """A file-stream micro-batch of 40 files lists them on the driver
+    under the session default: the batch runs its sink's job and no listing
+    job. At Spark's own threshold of 32 paths it also runs a distributed
+    listing job of one task per file."""
+    from pubsub_mapreduce_spark.sources.knobs import parse_knob_messages
+
+    topic = FileTopic(str(tmp_path / "topic"))
+    topic.publish(
+        spark.range(0, 40, 1, 40).select(
+            F.format_string('{"id": %d, "n": 1, "ts": 1.5}', F.col("id") % 5)
+            .alias("value")
+        )
+    )
+    assert len([f for f in os.listdir(topic.path) if f.endswith(".parquet")]) == 40
+
+    def jobs():
+        q = (
+            parse_knob_messages(topic.subscribe(spark, "value string"))
+            .writeStream.format("noop")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        assert q.recentProgress[0]["numInputRows"] == 40
+        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    default = spark.conf.get(key)
+    assert jobs() == 1
+    spark.conf.set(key, "32")
+    try:
+        assert jobs() == 2
+    finally:
+        spark.conf.set(key, default)
 
 
 def test_session_window_stream_matches_batch(spark, knob_dir):
@@ -543,7 +726,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
 
     stream = read_knob_stream(spark, src)
     deduped = dedup_stream(stream, ["id", "ts"], watermark_col="ts")
-    batches = run_foreach_batch(deduped, None, output_mode="append")
+    batches, _ = run_foreach_batch(deduped, None, output_mode="append")
     total = sum(len(rows) for _, rows in batches)
     assert total == 20 * TOTAL_KNOBS, (
         f"expected each (id, ts) admitted exactly once, got {total}"
@@ -561,7 +744,7 @@ def test_stream_static_enrich_matches_batch_and_is_stateless(spark, knob_dir):
         "id long, knob_name string",
     )
     enriched = stream_static_enrich(read_knob_stream(spark, knob_dir), dim, key="id")
-    batches = run_foreach_batch(enriched, None, output_mode="append")
+    batches, _ = run_foreach_batch(enriched, None, output_mode="append")
     got = sorted(
         (r["id"], r["n"], r["ts"], r["knob_name"])
         for _, rows in batches
@@ -661,7 +844,7 @@ def test_streaming_near_dedup_by_fingerprint(spark, tmp_path):
         .parquet(src)
     )
     out = near_dedup_stream(stream, text="text", watermark_col="ts")
-    batches = run_foreach_batch(out, None, output_mode="append")
+    batches, _ = run_foreach_batch(out, None, output_mode="append")
     admitted = sorted(r["doc_id"] for _, rows_ in batches for r in rows_)
     # one of {1,2,3} (first arrival) + doc 4
     assert len(admitted) == 2 and 4 in admitted and admitted[0] in (1, 2, 3)
