@@ -544,8 +544,7 @@ def q_fk_orphans(spark, sf_dir):
 
 def q_user_cusum_target(spark, sf_dir):
     """Online tabular CUSUM vs a reference level, with alarms+resets
-    (robust.user_cusum_target) — integer fold; live twin
-    streaming.cusum_stream is pinned snapshot-identical."""
+    (robust.user_cusum_target) — integer fold."""
     return RB.user_cusum_target(load_tables(spark, sf_dir)["events"])
 
 
@@ -712,8 +711,7 @@ def q_dedup_simhash(spark, sf_dir):
 
 
 def q_dedup_fingerprint(spark, sf_dir):
-    """Batch fingerprint-level dedup (the batch twin of
-    streaming.near_dedup_stream): one keeper per SimHash — collapses
+    """Batch fingerprint-level dedup: one keeper per SimHash — collapses
     whitespace/case/template variants exact content hashing admits."""
     sh = dedup.simhash(load_tables(spark, sf_dir)["documents"])
     return sh.groupBy("simhash").agg(
@@ -887,8 +885,7 @@ def q_source_entropy(spark, sf_dir):
 def q_rolling_spend(spark, sf_dir):
     """Per-user last-3-purchase rolling spend (feature_maintain.
     rolling_spend_batch): bounded last-N window on (ts, event_id)
-    order, integer cents — the batch twin of the transformWithState
-    ListState maintainer (stream==batch pinned live)."""
+    order, integer cents."""
     from pubsub_mapreduce_spark.streaming.feature_maintain import (
         rolling_spend_batch,
     )
@@ -898,9 +895,7 @@ def q_rolling_spend(spark, sf_dir):
 
 def q_favorite_event_type(spark, sf_dir):
     """Per-user modal event type under the (count DESC, type ASC)
-    tie-break (feature_maintain.favorite_type_batch) — the batch twin
-    of the transformWithState MapState counter maintainer
-    (stream==batch pinned live)."""
+    tie-break (feature_maintain.favorite_type_batch)."""
     from pubsub_mapreduce_spark.streaming.feature_maintain import (
         favorite_type_batch,
     )
@@ -3012,10 +3007,7 @@ def q_matryoshka_eval(spark, sf_dir):
 def q_purchase_streaks(spark, sf_dir):
     """Per-user purchase streaks (streak_maintain.streaks_batch):
     consecutive-day runs via gaps-and-islands, reporting the streak
-    ending at each user's latest purchase day — the engagement metric
-    the transformWithState streaming twin maintains incrementally
-    (the stream==batch pin runs LIVE under the round-6 protobuf shim;
-    see compat.py and TESTDATA.md)."""
+    ending at each user's latest purchase day."""
     from pubsub_mapreduce_spark.streaming.streak_maintain import (
         streaks_batch,
     )

@@ -23,8 +23,8 @@ What it does (all reversible, nothing installed):
   gencode is 6.33.0 while the SDK runtime is 6.32.0 — one minor
   version apart within the same major, which the strict
   runtime>=gencode check rejects but the wire format is unaffected by
-  (validated end-to-end: the streak maintainer's stream==batch pin
-  passes bit-exact under the shim, tests/test_streaming.py).
+  (validated end-to-end: the event-time-timer sessionizer's
+  stream==batch pin passes under the shim, tests/test_streaming.py).
 
 Opt out with ``SPARK_GRAFT_NO_PB_SHIM=1``. No-op when ``google.
 protobuf`` already imports or no SDK copy exists (the import-or-skip

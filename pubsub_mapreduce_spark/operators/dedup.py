@@ -574,35 +574,6 @@ def simhash(docs: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def simhash_rowwise(docs: DataFrame, text: str = "text") -> DataFrame:
-    """Per-ROW SimHash: the same 32-bit fingerprint as ``simhash`` but
-    computed entirely inside one projection (token-hash array + a
-    32-step nested HOF fold) — NO explode, NO shuffle. This is the form
-    a streaming pipeline needs: each doc is one row, and the agg form's
-    explode+groupBy would shuffle every micro-batch. Batch A/B at
-    sf0.1: the interpreted fold matches the codegen'd agg form only
-    when spread across cores (0.64s widened vs 0.60s agg; 6.7s on a
-    single-partition scan), so the agg form stays the batch default and
-    this one serves streaming + map-only contexts. Bit-for-bit equal to
-    ``simhash`` (pinned in tests): same votes, same >=0 tie, same bit
-    weights, token multiplicity preserved by ``transform``."""
-    hs = F.transform(tokens(normalized_text(text)), lambda t: token_hash32(t))
-    fold = F.expr(
-        """aggregate(sequence(0, 31), CAST(0 AS BIGINT), (acc, i) ->
-             acc + CASE WHEN aggregate(__hs, CAST(0 AS BIGINT),
-                       (a, h) -> a + CASE WHEN ((h >> i) & 1) = 1
-                                      THEN CAST(1 AS BIGINT)
-                                      ELSE CAST(-1 AS BIGINT) END) >= 0
-                   THEN CAST(1 AS BIGINT) << i
-                   ELSE CAST(0 AS BIGINT) END)"""
-    )
-    return (
-        docs.withColumn("__hs", hs)
-        .withColumn("simhash", fold)
-        .drop("__hs")
-    )
-
-
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming, found
     via the standard block-permutation trick: split the 32-bit key into

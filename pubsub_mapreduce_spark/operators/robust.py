@@ -628,12 +628,10 @@ def user_cusum_target(
     alarm count per user.
 
     Non-associative recursion -> per-key sorted HOF fold (the
-    user_value_ema pattern); the live twin ``streaming.cusum_stream``
-    carries O(1) state and is pinned snapshot-identical after ordered
-    replay. The oracle steps a recursive CTE: the alarm predicate
-    couples S+ and S-, which is exactly the cross-field accumulator
-    read DuckDB v1.0.0's in-place list_reduce gets wrong
-    (holt_forecast finding)."""
+    user_value_ema pattern). The oracle steps a recursive CTE: the
+    alarm predicate couples S+ and S-, which is exactly the
+    cross-field accumulator read DuckDB v1.0.0's in-place list_reduce
+    gets wrong (holt_forecast finding)."""
     up = target_cents + slack_cents
     dn = target_cents - slack_cents
     ev = events.select(

@@ -508,8 +508,7 @@ def dsir_model(
 ) -> DataFrame:
     """BUILD step: the |buckets|-sized Laplace-smoothed count model
     (bkt, r1, t1) — the thing a production DSIR run materializes once
-    and reuses across every scoring pass (batch re-curation or the
-    streaming ingest scorer)."""
+    and reuses across every scoring pass."""
     return (
         _dsir_buckets(docs, n_buckets)
         .groupBy("bkt")
@@ -526,16 +525,13 @@ def dsir_score(
     docs: DataFrame, model: DataFrame, n_buckets: int = 256
 ) -> DataFrame:
     """APPLY step: broadcast the bucket model onto the token stream,
-    one doc-keyed integer aggregate, one mirrored division. Shared by
-    the batch operator and the streaming scorer so stream == batch by
-    construction.
+    one doc-keyed integer aggregate, one mirrored division.
 
     Tokens hashing to buckets ABSENT from the model (possible whenever
-    the scored corpus is not the model's build corpus — the streaming
-    scorer's normal case) still count: the left join coalesces their
-    r1/t1 to 1, i.e. exactly the Laplace +1 prior an all-buckets-dense
-    model would hold for a zero-count bucket, and n_toks counts every
-    token."""
+    the scored corpus is not the model's build corpus) still count:
+    the left join coalesces their r1/t1 to 1, i.e. exactly the Laplace
+    +1 prior an all-buckets-dense model would hold for a zero-count
+    bucket, and n_toks counts every token."""
     from ..functions.text import round_half_up as rh
 
     # totals as the DENSE model would hold them: every bucket absent

@@ -1773,9 +1773,7 @@ def ivfpq_search(
     """Search an IVF+PQ index for a (query_id, q_emb) relation: probe
     selection and the ADC LUT are map-only against plan literals; the
     only joins ride cid (broadcast probe side) and the only keyed
-    exchange is the per-query top-k. Shared by the batch operator and
-    the streaming per-micro-batch searcher — one definition, one
-    semantics."""
+    exchange is the per-query top-k."""
     from ..functions.text import round_half_up
 
     q = queries.withColumn("lut", F.expr(_pq_lut_expr(seeds)))
@@ -1854,8 +1852,7 @@ def ann_ivfpq_topk(
     ties to smaller cid), PQ argmin encoding (ties to smaller code),
     sequence-mirrored ADC arithmetic, (adist asc, neighbor asc)
     ranking. Index build and search are the factored
-    ``build_ivfpq_index`` / ``ivfpq_search`` — the same two pieces the
-    streaming searcher wires per micro-batch."""
+    ``build_ivfpq_index`` / ``ivfpq_search``."""
     cents, seeds, assigned = build_ivfpq_index(
         emb, centroid_every, n_max_centroids, code_every, n_codes,
         cents=cents, seeds=seeds, corpus=corpus,

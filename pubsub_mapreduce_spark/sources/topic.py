@@ -4,10 +4,9 @@ util/util.go:45-70 get-or-create subscription).
 
 A "topic" is an append-only parquet directory; publishing is an
 append write (batch) or an append-mode streaming sink (continuous);
-subscribing is a file-source streaming read. In production the same
-call shape binds to a Kafka / Pub/Sub-Lite connector — every operator
-up- and downstream sees an identical DataFrame, so nothing else
-changes (SURVEY.md §2.1 S1, §4).
+subscribing is a file-source streaming read. A broker connector
+would bind to the same call shape — every operator up- and downstream
+sees an identical DataFrame (SURVEY.md §2.1 S1, §4).
 
 Semantics vs the reference:
 - get-or-create: the directory is created on first publish; subscribing
@@ -83,155 +82,3 @@ class FileTopic:
 
     def exists(self) -> bool:
         return os.path.isdir(self.path)
-
-
-# --------------------------------------------------------------------------
-# Kafka-backed topic: the real-broker binding of the same Topic API.
-# --------------------------------------------------------------------------
-
-
-def kafka_available(spark: SparkSession) -> bool:
-    """Whether the spark-sql-kafka connector is on the classpath. The
-    sandbox ships without it (and without a broker), so every broker
-    touch is gated — the envelope codecs below are pure DataFrame
-    transforms and stay fully testable either way."""
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def encode_kafka_envelope(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Serialize arbitrary rows into the Kafka wire shape: ``value`` =
-    JSON of the full row (binary), optional ``key`` column for
-    partition affinity (same-key messages preserve order per partition
-    — the reference's per-device ordering assumption, knobs.go:40-44).
-    Pure JVM expressions (to_json over a struct) — runs at scan speed,
-    no Python."""
-    from pyspark.sql import functions as F
-
-    value = F.to_json(F.struct(*df.columns)).cast("binary").alias("value")
-    if key is None:
-        return df.select(value)
-    return df.select(F.col(key).cast("string").cast("binary").alias("key"), value)
-
-
-def decode_kafka_envelope(df: DataFrame, schema: str) -> DataFrame:
-    """Inverse of ``encode_kafka_envelope``: parse the ``value`` JSON
-    back into typed columns so every downstream operator sees the SAME
-    DataFrame a FileTopic subscribe produces — the topic binding is
-    invisible above this line. ``from_json`` yields NULL structs for
-    malformed payloads (recover-and-ack poison handling, not a crash);
-    callers that must quarantine them filter ``value IS NOT NULL AND
-    msg IS NULL`` to a dead-letter sink."""
-    from pyspark.sql import functions as F
-
-    return df.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("msg")
-    ).select("msg.*")
-
-
-class KafkaTopic:
-    """Kafka binding of the Topic API (the BASELINE 'Structured
-    Streaming + Pub/Sub source' shape with a real broker protocol;
-    reference: util/util.go:25-70 get-or-create topic/subscription).
-
-    Same four verbs as FileTopic — publish / publish_stream /
-    subscribe / read_batch — so swapping bindings is a one-line change
-    and every operator up/downstream is untouched. Rows ride as a JSON
-    envelope in ``value`` (see the codec pair above); ``key`` carries
-    the partition-affinity column when per-key ordering matters.
-
-    Scale notes: the source's ``maxOffsetsPerTrigger`` is the
-    flow-control knob (the reference's MaxOutstandingMessages,
-    mapper.go:48-51); ``minPartitions`` decouples Spark read
-    parallelism from broker partition count. Delivery is checkpointed
-    exactly-once into Spark state (C1), at-least-once into the broker
-    on the publish side (idempotent downstream via dedup on a message
-    id, same as the reference's ack-after-process)."""
-
-    def __init__(self, bootstrap_servers: str, topic: str):
-        self.bootstrap_servers = bootstrap_servers
-        self.topic = topic
-
-    def _require(self, spark: SparkSession) -> None:
-        if not kafka_available(spark):
-            raise RuntimeError(
-                "spark-sql-kafka connector not on the classpath; add "
-                "org.apache.spark:spark-sql-kafka-0-10_2.13 via "
-                "spark.jars.packages (no broker in this sandbox — use "
-                "FileTopic for local runs)"
-            )
-
-    # -- publish -------------------------------------------------------
-
-    def publish(self, df: DataFrame, key: str | None = None) -> None:
-        self._require(df.sparkSession)
-        (
-            encode_kafka_envelope(df, key=key)
-            .write.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap_servers)
-            .option("topic", self.topic)
-            .save()
-        )
-
-    def publish_stream(
-        self,
-        df: DataFrame,
-        checkpoint: str,
-        key: str | None = None,
-        trigger_once: bool = True,
-        processing_time: str | None = None,
-    ) -> StreamingQuery:
-        self._require(df.sparkSession)
-        w = (
-            encode_kafka_envelope(df, key=key)
-            .writeStream.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap_servers)
-            .option("topic", self.topic)
-            .option("checkpointLocation", checkpoint)
-        )
-        if processing_time is not None:
-            w = w.trigger(processingTime=processing_time)
-        elif trigger_once:
-            w = w.trigger(availableNow=True)
-        return w.start()
-
-    # -- subscribe -----------------------------------------------------
-
-    def subscribe(
-        self,
-        spark: SparkSession,
-        schema: str,
-        starting_offsets: str = "earliest",
-        max_offsets_per_trigger: int | None = None,
-        min_partitions: int | None = None,
-    ) -> DataFrame:
-        self._require(spark)
-        r = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap_servers)
-            .option("subscribe", self.topic)
-            .option("startingOffsets", starting_offsets)
-        )
-        if max_offsets_per_trigger is not None:
-            r = r.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-        if min_partitions is not None:
-            r = r.option("minPartitions", min_partitions)
-        return decode_kafka_envelope(r.load(), schema)
-
-    def read_batch(self, spark: SparkSession, schema: str) -> DataFrame:
-        """Batch replay of the whole topic (earliest..latest)."""
-        self._require(spark)
-        raw = (
-            spark.read.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap_servers)
-            .option("subscribe", self.topic)
-            .option("startingOffsets", "earliest")
-            .option("endingOffsets", "latest")
-            .load()
-        )
-        return decode_kafka_envelope(raw, schema)

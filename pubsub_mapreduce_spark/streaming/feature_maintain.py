@@ -1,155 +1,19 @@
-"""Two more ``transformWithState`` feature maintainers, exercising the
-state primitives the streak tracker (ValueState, streak_maintain.py)
-does not: **ListState** (bounded last-N history) and **MapState**
-(per-key counter table). Together the three modules demonstrate the
-full typed-state surface of Spark 4's arbitrary-stateful API, each
-with an exact-oracle-paired batch twin and a stream==batch replay pin
-(tests/test_streaming.py) — runnable in this container since the
-round-6 protobuf unblock (compat.ensure_protobuf, TESTDATA.md).
+"""Batch per-user purchase features read back by registered queries:
+the rolling spend over the last ``ROLLING_N`` purchases
+(``rolling_spend_batch``) and the modal event type
+(``favorite_type_batch``). Each is one user-keyed shuffle with a bounded
+window inside it, and each is paired with an exact DuckDB oracle.
 
 Reference scope: the reference's only keyed state is latest-per-key
-(knobs.go:101); these are part of the beyond-reference streaming
-surface (feature-store maintenance: the serving-side state a training
-pipeline reads back as point-in-time features).
-
-100 TB notes: both processors keep O(1)-bounded state per user
-(last N cents / one counter per event type), sharded by the group key
-in RocksDB; emissions are one row per (user, batch-with-activity).
-
-In-order assumption: like the streak maintainer, folds assume per-user
-time-ordered arrival ACROSS batches (within a batch rows are sorted
-before folding); the batch twins are order-insensitive.
+(knobs.go:101); these are batch feature-store queries beyond it.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 ROLLING_N = 3
-
-ROLLING_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_purchases", LongType()),
-        StructField("lastn_cents", LongType()),
-        StructField("lastn_len", LongType()),
-    ]
-)
-
-_ROLLING_STATE_SCHEMA = StructType(
-    [
-        StructField("ts_s", LongType()),
-        StructField("eid", LongType()),
-        StructField("cents", LongType()),
-    ]
-)
-
-_ROLLING_COUNT_SCHEMA = StructType([StructField("n", LongType())])
-
-
-class RollingSpendProcessor(StatefulProcessor):
-    """ListState fold: keep the last ``ROLLING_N`` purchase amounts
-    (by event time) per user; emit their sum after each batch with
-    activity, plus the lifetime purchase count (ValueState)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._last = handle.getListState("lastn", _ROLLING_STATE_SCHEMA)
-        self._count = handle.getValueState("n", _ROLLING_COUNT_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        batch = []
-        for pdf in rows:
-            batch.extend(
-                (int(t), int(e), int(c))
-                for t, e, c in zip(pdf["ts_s"], pdf["eid"], pdf["cents"])
-            )
-        if not batch:
-            return
-        # same (ts, event_id) order as the batch twin's window sort
-        batch.sort()
-        prev = [tuple(map(int, r)) for r in self._last.get()]
-        n_prev = int(self._count.get()[0]) if self._count.exists() else 0
-        merged = (prev + batch)[-ROLLING_N:]
-        self._last.put(merged)
-        self._count.update((n_prev + len(batch),))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "n_purchases": [n_prev + len(batch)],
-                "lastn_cents": [sum(c for _, _, c in merged)],
-                "lastn_len": [len(merged)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-FAVORITE_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("fav_type", StringType()),
-        StructField("n_fav", LongType()),
-        StructField("n_total", LongType()),
-    ]
-)
-
-_FAV_KEY_SCHEMA = StructType([StructField("t", StringType())])
-_FAV_VAL_SCHEMA = StructType([StructField("c", LongType())])
-
-
-class FavoriteTypeProcessor(StatefulProcessor):
-    """MapState counter table: per user, one counter per event type;
-    emit the argmax (count DESC, type ASC — the batch twin's exact
-    tie-break) after each batch with activity."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._counts = handle.getMapState(
-            "counts", _FAV_KEY_SCHEMA, _FAV_VAL_SCHEMA
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        delta: dict[str, int] = {}
-        for pdf in rows:
-            for t in pdf["event_type"]:
-                delta[str(t)] = delta.get(str(t), 0) + 1
-        if not delta:
-            return
-        for t, d in delta.items():
-            cur = (
-                int(self._counts.getValue((t,))[0])
-                if self._counts.containsKey((t,))
-                else 0
-            )
-            self._counts.updateValue((t,), (cur + d,))
-        table = {
-            str(k[0]): int(v[0]) for k, v in self._counts.iterator()
-        }
-        fav = min(table.items(), key=lambda kv: (-kv[1], kv[0]))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "fav_type": [fav[0]],
-                "n_fav": [fav[1]],
-                "n_total": [sum(table.values())],
-            }
-        )
-
-    def close(self) -> None:
-        pass
 
 
 def _purchases(events: DataFrame) -> DataFrame:
@@ -162,11 +26,10 @@ def _purchases(events: DataFrame) -> DataFrame:
 
 
 def rolling_spend_batch(events: DataFrame, n: int = ROLLING_N) -> DataFrame:
-    """Batch twin of RollingSpendProcessor: per user, the sum of the
-    last ``n`` purchase amounts by (ts, event_id) order plus the
-    lifetime purchase count — one user-keyed shuffle, a bounded
-    last-N window inside it. Integer cents end-to-end; the only
-    division (the mean) is rounded once."""
+    """Per user, the sum of the last ``n`` purchase amounts by
+    (ts, event_id) order plus the lifetime purchase count — one
+    user-keyed shuffle, a bounded last-N window inside it. Integer
+    cents end-to-end; the only division (the mean) is rounded once."""
     from pyspark.sql import Window
     from ..functions.text import round_half_up
 
@@ -207,9 +70,9 @@ def rolling_spend_batch(events: DataFrame, n: int = ROLLING_N) -> DataFrame:
 
 
 def favorite_type_batch(events: DataFrame) -> DataFrame:
-    """Batch twin of FavoriteTypeProcessor: per user, the modal event
-    type under the deterministic (count DESC, type ASC) tie-break —
-    one keyed rollup plus a |users x types|-bounded ranking window."""
+    """Per user, the modal event type under the deterministic
+    (count DESC, type ASC) tie-break — one keyed rollup plus a
+    |users x types|-bounded ranking window."""
     from pyspark.sql import Window
 
     counts = events.groupBy("user_id", "event_type").agg(
@@ -233,39 +96,5 @@ def favorite_type_batch(events: DataFrame) -> DataFrame:
             F.col("event_type").alias("fav_type"),
             F.col("c").alias("n_fav"),
             "n_total",
-        )
-    )
-
-
-def rolling_spend_stream(events_stream: DataFrame) -> DataFrame:
-    """The transformWithState (ListState) form over a purchase stream."""
-    return (
-        events_stream.where(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.unix_timestamp("ts").alias("ts_s"),
-            F.col("event_id").alias("eid"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RollingSpendProcessor(),
-            outputStructType=ROLLING_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
-        )
-    )
-
-
-def favorite_type_stream(events_stream: DataFrame) -> DataFrame:
-    """The transformWithState (MapState) form over the event stream."""
-    return (
-        events_stream.select("user_id", "event_type")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=FavoriteTypeProcessor(),
-            outputStructType=FAVORITE_OUT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
         )
     )

@@ -28,7 +28,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
@@ -187,8 +186,8 @@ def running_total_stream(counts: DataFrame, cnt_col: str | None = "cnt") -> Data
     query: Spark rejects stateful-after-aggregation chaining in a single
     streaming plan (the reference crosses that boundary with a Pub/Sub
     topic, mapper->reducer). To replay the exact two-stage topology,
-    chain two queries through an intermediate sink (foreachBatch /
-    Kafka-like topic), or use this row-count form on the raw stream —
+    chain two queries through an intermediate sink (foreachBatch or a
+    ``FileTopic``), or use this row-count form on the raw stream —
     same totals, one state store."""
 
     def update(
@@ -207,456 +206,5 @@ def running_total_stream(counts: DataFrame, cnt_col: str | None = "cnt") -> Data
         outputStructType=RUNNING_TOTAL_OUTPUT,
         stateStructType=RUNNING_TOTAL_STATE,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def dedup_stream(
-    df: DataFrame,
-    key_cols: list[str],
-    watermark_col: str = "ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup: keep the FIRST arrival per key, drop later
-    duplicates that land within the watermark horizon — the streaming
-    form of ``operators.dedup.exact_dedup`` for an ingest pipeline that
-    must not admit the same document twice.
-
-    ``dropDuplicatesWithinWatermark`` (not ``dropDuplicates``): both keep
-    first-arrival, but plain streaming dropDuplicates holds EVERY key
-    seen forever — unbounded state on an unbounded corpus.  The
-    WithinWatermark form evicts a key's state once the watermark passes
-    its arrival, so state is O(keys per horizon), the only bound that
-    survives a 100TB/day ingest.  The trade is explicit: a duplicate
-    arriving later than ``delay`` after the original is admitted (dedup
-    horizon = watermark, same contract as the reference's LWW guard
-    which also only orders within its visibility window, knobs.go:101)."""
-    return df.withWatermark(watermark_col, delay).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-
-def near_dedup_stream(
-    docs: DataFrame,
-    text: str = "text",
-    watermark_col: str = "ts",
-    delay: str = "10 minutes",
-) -> DataFrame:
-    """Streaming FINGERPRINT-level near-dedup: drop any document whose
-    32-bit SimHash exactly matches one seen within the watermark
-    horizon — boilerplate re-crawls, mirrored pages, and template spam
-    collapse to identical fingerprints even when byte-level content
-    differs (whitespace/case drift), which plain ``dedup_stream`` on
-    the content hash admits.
-
-    This is the streaming-feasible tier of the near-dup family: the
-    SimHash is computed PER ROW (``dedup.simhash_rowwise`` — no
-    per-micro-batch shuffle), and state is one fingerprint per horizon
-    via ``dropDuplicatesWithinWatermark``. Hamming-distance pair tiers
-    (block joins) stay batch: a streaming candidate join would need
-    stream-stream self-joins with unbounded fingerprint state."""
-    from ..operators.dedup import simhash_rowwise
-
-    return (
-        simhash_rowwise(docs, text=text)
-        .withWatermark(watermark_col, delay)
-        .dropDuplicatesWithinWatermark(["simhash"])
-    )
-
-
-def distinct_ids_stream(
-    msgs: DataFrame,
-    window: str = "1 second",
-    watermark: str = "2 seconds",
-) -> DataFrame:
-    """Windowed APPROX-distinct ids in streaming (extension beyond the
-    reference's count-only surface): how many distinct devices reported
-    per window.
-
-    approx_count_distinct (HLL++) is the only viable streaming form at
-    scale: exact distinct would hold every key seen per open window in
-    the state store (O(windows x keys)); the HLL buffer is a fixed
-    ~1.5KB per window regardless of cardinality, merged across the
-    partial/final aggregate split like any declarative agg. Estimate
-    error ~2% default rsd; stream==batch parity is pinned in tests
-    (identical input -> identical sketch -> identical estimate)."""
-    return (
-        msgs.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"))
-        .agg(F.approx_count_distinct("id").alias("approx_ids"))
-        .select(F.col("w.start").alias("window_start"), "approx_ids")
-    )
-
-
-FUNNEL_STATE_SCHEMA = StructType(
-    [
-        StructField("stage", LongType()),
-        StructField("last_ts", DoubleType()),  # epoch seconds of last step
-    ]
-)
-FUNNEL_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("stage", LongType()),
-        StructField("ts_s", DoubleType()),
-    ]
-)
-
-
-def funnel_stream(
-    events: DataFrame,
-    steps: tuple[str, ...] = ("view", "click", "purchase"),
-    horizon_s: float = 3600.0,
-) -> DataFrame:
-    """Sequential pattern matching as a STATEFUL streaming operator —
-    the live form of ``relational.funnel_conversion``: per user, advance
-    through ``steps`` on the first qualifying event (each transition
-    within ``horizon_s`` of the previous), emitting a row per stage
-    reached. Greedy in event order == the batch form's staged minima
-    (first qualifying event IS the minimum), so stream and batch agree
-    row-for-row on ordered replay — pinned in tests.
-
-    State per user is TWO scalars (stage, last step time) no matter how
-    long the history: the batch form re-scans staged windows; the
-    stream pays O(1) per event. Within a micro-batch rows are sorted by
-    (event time, event_id); cross-batch order comes from the source
-    (file replay here; per-key ordered partitions on a real broker)."""
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            stage, last_ts = state.get
-        else:
-            stage, last_ts = 0, float("-inf")
-        rows: list[tuple[int, int, float]] = []
-        batch = []
-        for pdf in pdfs:
-            for ts, eid, typ in zip(pdf["ts"], pdf["event_id"], pdf["event_type"]):
-                batch.append((pd.Timestamp(ts).timestamp(), int(eid), str(typ)))
-        batch.sort()
-        for ts_s, _eid, typ in batch:
-            if stage < len(steps) and typ == steps[stage]:
-                if stage == 0 or (last_ts <= ts_s <= last_ts + horizon_s):
-                    stage += 1
-                    last_ts = ts_s
-                    rows.append((key[0], stage, ts_s))
-        state.update((stage, last_ts))
-        if rows:
-            yield pd.DataFrame(rows, columns=["user_id", "stage", "ts_s"])
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-SESSIONIZE_STATE_SCHEMA = StructType(
-    [
-        StructField("start", DoubleType()),
-        StructField("last", DoubleType()),
-        StructField("n", LongType()),
-    ]
-)
-SESSIONIZE_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start_s", DoubleType()),
-        StructField("session_end_s", DoubleType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-
-def sessionize_stream(
-    events: DataFrame, gap_s: float = 30.0, watermark: str = "10 seconds"
-) -> DataFrame:
-    """Custom stateful sessionization with EXPLICIT state eviction —
-    the mechanism ``F.session_window`` hides: per user, one (start,
-    last, count) record in the state store; a session closes either
-    inline (the next event arrives past the gap) or via an EVENT-TIME
-    TIMEOUT when the watermark passes ``last + gap`` — so state for
-    departed users is dropped, not held forever (the unbounded-state
-    leak every hand-rolled sessionizer hits). Emits one row per CLOSED
-    session; the in-flight session stays in state.
-
-    State is three scalars per ACTIVE user — eviction means "active",
-    not "ever seen", which is the difference between O(online users)
-    and O(all users) state at 100TB-stream scale."""
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        rows: list[tuple[int, float, float, int]] = []
-        if state.hasTimedOut:
-            start, last, n = state.get
-            rows.append((key[0], start, last, int(n)))
-            state.remove()
-        else:
-            cur = state.get if state.exists else None
-            batch: list[float] = []
-            for pdf in pdfs:
-                batch.extend(pd.Timestamp(ts).timestamp() for ts in pdf["ts"])
-            batch.sort()
-            for ts_s in batch:
-                if cur is None:
-                    cur = (ts_s, ts_s, 1)
-                elif ts_s - cur[1] > gap_s:
-                    rows.append((key[0], cur[0], cur[1], int(cur[2])))
-                    cur = (ts_s, ts_s, 1)
-                else:
-                    cur = (cur[0], max(cur[1], ts_s), cur[2] + 1)
-            if cur is not None:
-                state.update(cur)
-                state.setTimeoutTimestamp(int((cur[1] + gap_s) * 1000))
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=["user_id", "session_start_s", "session_end_s", "n_events"],
-            )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=SESSIONIZE_OUTPUT_SCHEMA,
-            stateStructType=SESSIONIZE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-SPACESAVING_STATE_SCHEMA = StructType(
-    [
-        StructField("keys", StringType()),  # json-encoded table: k -> [cnt, err]
-        StructField("seq", LongType()),
-    ]
-)
-SPACESAVING_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("shard", LongType()),
-        StructField("seq", LongType()),
-        StructField("key", LongType()),
-        StructField("cnt_hi", LongType()),
-        StructField("err", LongType()),
-    ]
-)
-
-
-def heavy_hitters_stream(
-    events: DataFrame,
-    key: str = "user_id",
-    capacity: int = 32,
-    n_shards: int = 4,
-) -> DataFrame:
-    """Streaming heavy hitters via SHARDED space-saving (Metwally et
-    al. 2005) — the live form of ``sketches.heavy_hitters`` for key
-    spaces too large to count exactly in state. Each shard (keys hashed
-    to ``n_shards`` groups) maintains a bounded table of at most
-    ``capacity`` (key, cnt_hi, err) entries: a tracked key increments;
-    an untracked key evicts the minimum entry, inheriting its count as
-    the new entry's error bound. Invariants (pinned in tests):
-
-    - true count is always within [cnt_hi - err, cnt_hi];
-    - any key with true count > (shard stream length / capacity) IS in
-      the table — no false negatives above the threshold, the
-      space-saving guarantee;
-    - state per shard is O(capacity) forever, regardless of stream
-      length or cardinality.
-
-    After each micro-batch every shard emits its full table stamped
-    with a monotone ``seq`` — downstream takes the latest seq per
-    shard (the table is a SNAPSHOT, not a delta). Sharding by key hash
-    means per-key counts are exact-per-shard summaries and the global
-    candidate set is the union of shard tables — the standard
-    distributed decomposition, same shape the batch merge of per-node
-    summaries would take."""
-    import json
-
-    def update(
-        k: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            raw, seq = state.get
-            table: dict[str, list[int]] = json.loads(raw)
-        else:
-            table, seq = {}, 0
-        for pdf in pdfs:
-            for kk in pdf["k"]:
-                kk = str(int(kk))
-                if kk in table:
-                    table[kk][0] += 1
-                elif len(table) < capacity:
-                    table[kk] = [1, 0]
-                else:
-                    victim = min(table.items(), key=lambda kv: (kv[1][0], kv[0]))
-                    m = victim[1][0]
-                    del table[victim[0]]
-                    table[kk] = [m + 1, m]
-        seq += 1
-        state.update((json.dumps(table), seq))
-        yield pd.DataFrame(
-            [
-                (k[0], seq, int(kk), c, e)
-                for kk, (c, e) in sorted(table.items())
-            ],
-            columns=["shard", "seq", "key", "cnt_hi", "err"],
-        )
-
-    shards = events.select(
-        F.expr(f"pmod(xxhash64({key}), {n_shards})").alias("shard"),
-        F.col(key).cast("long").alias("k"),
-    )
-    return shards.groupBy("shard").applyInPandasWithState(
-        update,
-        outputStructType=SPACESAVING_OUTPUT_SCHEMA,
-        stateStructType=SPACESAVING_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-EMA_STATE_SCHEMA = StructType(
-    [
-        StructField("ema", LongType()),
-        StructField("last", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-EMA_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("ema_cents", LongType()),
-        StructField("last_cents", LongType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-
-def ema_stream(events: DataFrame, shift: int = 2) -> DataFrame:
-    """Live form of ``robust.user_value_ema``: per-user exponential
-    smoothing with O(1) state (ema, last, n) — the batch form folds the
-    whole sorted history; the stream pays one integer step per event
-    and carries three longs per key forever. Same arithmetic
-    (non-negative cents, integral division), so after an ordered replay
-    the final per-user snapshot equals the batch fold EXACTLY — pinned
-    in tests. Emits one snapshot row per active user per micro-batch
-    (downstream keeps the latest n_events per user)."""
-    denom = 1 << shift
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ema, last, n = state.get
-        else:
-            ema, last, n = -1, 0, 0
-        batch = []
-        for pdf in pdfs:
-            for ts, eid, v in zip(pdf["ts"], pdf["event_id"], pdf["value"]):
-                cents = int(round(float(v) * 100))
-                batch.append((pd.Timestamp(ts).timestamp(), int(eid), cents))
-        batch.sort()
-        for _ts, _eid, cents in batch:
-            ema = cents if n == 0 else (cents + (denom - 1) * ema) // denom
-            last = cents
-            n += 1
-        state.update((ema, last, n))
-        yield pd.DataFrame(
-            [(key[0], ema, last, n)],
-            columns=["user_id", "ema_cents", "last_cents", "n_events"],
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=EMA_OUTPUT_SCHEMA,
-        stateStructType=EMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-CUSUM_STATE_SCHEMA = StructType(
-    [
-        StructField("sp", LongType()),
-        StructField("sn", LongType()),
-        StructField("n", LongType()),
-        StructField("na", LongType()),
-    ]
-)
-CUSUM_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("cusum_pos", LongType()),
-        StructField("cusum_neg", LongType()),
-        StructField("n_alarms", LongType()),
-    ]
-)
-
-
-def cusum_stream(
-    events: DataFrame,
-    target_cents: int = 25000,
-    slack_cents: int = 2500,
-    h_cents: int = 20000,
-) -> DataFrame:
-    """Live form of ``robust.user_cusum_target``: tabular CUSUM against
-    a known reference, O(1) state per key (S+, S-, n, n_alarms) — the
-    drift alarm runs ON the stream instead of on a nightly fold, with
-    the restart-after-signal reset keeping state bounded forever.
-    Same integer recursion, so after ordered replay the final per-user
-    snapshot equals the batch fold EXACTLY (pinned). Emits one
-    snapshot row per active user per micro-batch."""
-    up = target_cents + slack_cents
-    dn = target_cents - slack_cents
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            sp, sn, n, na = state.get
-        else:
-            sp, sn, n, na = 0, 0, 0, 0
-        batch = []
-        for pdf in pdfs:
-            for ts, eid, v in zip(pdf["ts"], pdf["event_id"], pdf["value"]):
-                cents = int(round(float(v) * 100))
-                batch.append((pd.Timestamp(ts).timestamp(), int(eid), cents))
-        batch.sort()
-        for _ts, _eid, c in batch:
-            sp1 = max(0, sp + (c - up))
-            sn1 = max(0, sn + (dn - c))
-            if sp1 > h_cents or sn1 > h_cents:
-                sp, sn, na = 0, 0, na + 1
-            else:
-                sp, sn = sp1, sn1
-            n += 1
-        state.update((sp, sn, n, na))
-        yield pd.DataFrame(
-            [(key[0], n, sp, sn, na)],
-            columns=["user_id", "n_events", "cusum_pos", "cusum_neg", "n_alarms"],
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

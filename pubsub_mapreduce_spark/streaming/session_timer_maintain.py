@@ -1,11 +1,9 @@
 """Gap-timeout sessionizer on ``transformWithState`` EVENT-TIME TIMERS
-— the fourth and final primitive of Spark 4's arbitrary-stateful API
-demonstrated by this engine (ValueState: streak_maintain; ListState /
-MapState: feature_maintain; timers: here). ``session_agg.py`` builds
-the same sessions with the BUILT-IN ``session_window`` aggregation;
-this module is the custom-state formulation a pipeline uses when the
-session close must trigger arbitrary logic (feature writes, alerts)
-rather than an aggregate row — and the two are pinned equal.
+(ValueState plus one event-time timer per user). This is the
+custom-state formulation a pipeline uses when a session close must
+trigger arbitrary logic (feature writes, alerts) rather than an
+aggregate row; its stream output is pinned equal to the batch
+lag/gap-sum sessionization ``sessions_batch`` (tests/test_streaming.py).
 
 Semantics: a session is a maximal run of a user's events with no gap
 larger than ``GAP_MS``. Events arriving within a batch may close a

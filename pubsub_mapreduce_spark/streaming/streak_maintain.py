@@ -1,122 +1,20 @@
-"""Per-user purchase-STREAK tracker on Spark 4's ``transformWithState``
-API — the arbitrary-stateful-processing successor to
-``applyInPandasWithState`` (which T1's latest-per-key stream uses), so
-the streaming surface demonstrates BOTH generations of custom state:
-typed per-key state handles (ValueState), Arrow-batched row handling,
-and the RocksDB state store backend the new API requires.
+"""Per-user purchase streaks, batch form (``streaks_batch``), which the
+registered ``purchase_streaks`` query reads.
 
 Semantics: a user's streak is the number of CONSECUTIVE calendar days,
 ending at their latest purchase day, on which they purchased. Same-day
-repeats don't extend it; a gap day resets it to 1. The processor keeps
-(last_day, streak) in a ValueState and folds each micro-batch's
-purchase days in order — state crosses batch boundaries, so a streak
-built over many batches reads exactly as the batch gaps-and-islands
-computation (``streaks_batch`` below), which the test pins.
-
-Out-of-order arrivals ACROSS micro-batches: the fold is MONOTONE — a
-day ``<= last_day`` arriving in a later batch is skipped (it can only
-be a replay or a late event for a day the fold already passed), so
-late data never moves ``last_day`` backwards or resets a live streak.
-The divergence from the order-insensitive batch form is one-sided and
-bounded: a late day that would have BRIDGED a gap (extending the
-current island leftwards) is not retroactively counted — the stream
-reports a streak <= the batch answer, never a longer or reset one.
-Exact stream==batch equality therefore assumes per-user day-ordered
-arrival across batches (within a batch, any order is fine — days are
-set-deduped and sorted before the fold), which the replay test
-satisfies and a production deployment gets from watermarked ordered
-replay of a keyed log.
+repeats don't extend it; a gap day resets it to 1. Computed as
+gaps-and-islands over each user's distinct purchase days, so the
+answer does not depend on arrival order.
 
 Reference scope: the reference has no per-key custom state machine
-(its only keyed state is latest-per-key, knobs.go:101); this is part
-of the beyond-reference streaming surface.
-
-ENVIRONMENT: the transformWithState state-server protocol needs
-``google.protobuf``. Containers without the wheel get it from the
-Cloud SDK's pure-Python copy via ``compat.ensure_protobuf()`` (wired
-into ``session.get_spark()``; see compat.py and TESTDATA.md), under
-which the stream==batch pin runs LIVE and bit-exact. Where neither a
-wheel nor an SDK copy exists the pin skips; ``streaks_batch`` is the
-registered, exact-oracle-paired batch form of the same semantics
-either way.
-
-100 TB notes: state is one tiny struct per user sharded by the group
-key; RocksDB keeps it off-heap and checkpointed. Emissions are one row
-per (user, batch-with-activity), so the sink load tracks activity, not
-state size.
+(its only keyed state is latest-per-key, knobs.go:101).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
-from pyspark.sql.types import (
-    LongType,
-    StructField,
-    StructType,
-)
-
-OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("streak", LongType()),
-        StructField("last_day", LongType()),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("last_day", LongType()),
-        StructField("streak", LongType()),
-    ]
-)
-
-
-class StreakProcessor(StatefulProcessor):
-    """ValueState fold: (last_day, streak) advanced by each batch's
-    sorted purchase days; emits the post-batch state row."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("streak_state", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        days = set()
-        for pdf in rows:
-            days.update(int(d) for d in pdf["day"])
-        if not days:
-            return
-        if self._state.exists():
-            last_day, streak = self._state.get()
-        else:
-            last_day, streak = None, 0
-        for d in sorted(days):
-            # Monotone fold: a day at-or-before the stored last_day is
-            # a same-day repeat or a cross-batch late arrival — skip
-            # (never move last_day backwards / reset a live streak).
-            if last_day is not None and d <= last_day:
-                continue
-            if last_day is not None and d == last_day + 1:
-                streak += 1
-            else:
-                streak = 1
-            last_day = d
-        self._state.update((int(last_day), int(streak)))
-        yield pd.DataFrame(
-            {
-                "user_id": [int(key[0])],
-                "streak": [int(streak)],
-                "last_day": [int(last_day)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
 
 
 def _purchase_days(events: DataFrame) -> DataFrame:
@@ -126,24 +24,10 @@ def _purchase_days(events: DataFrame) -> DataFrame:
     )
 
 
-def streaks_stream(events_stream: DataFrame) -> DataFrame:
-    """The transformWithState form over a purchase-event stream."""
-    return (
-        _purchase_days(events_stream)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=StreakProcessor(),
-            outputStructType=OUT_SCHEMA,
-            outputMode="append",
-            timeMode="None",
-        )
-    )
-
-
 def streaks_batch(events: DataFrame) -> DataFrame:
-    """Batch twin: gaps-and-islands over each user's distinct purchase
-    days — the streak is the size of the island containing the max
-    day. One shuffle on user_id; everything windows inside it."""
+    """Gaps-and-islands over each user's distinct purchase days — the
+    streak is the size of the island containing the max day. One
+    shuffle on user_id; everything windows inside it."""
     from pyspark.sql import Window
 
     d = _purchase_days(events).distinct()
@@ -165,23 +49,4 @@ def streaks_batch(events: DataFrame) -> DataFrame:
     )
     return agg.select(
         "user_id", F.col("len").alias("streak"), "last_day"
-    )
-
-
-def start_streak_maintain(
-    events_stream: DataFrame, out_dir: str, checkpoint_dir: str
-):
-    """Run the streak tracker end-to-end into a parquet append sink
-    (one row per user per batch-with-activity; the row with the
-    greatest ``last_day`` per user is the final state). Returns the
-    StreamingQuery. Requires the RocksDB state store provider — set by
-    the caller or session factory."""
-    out = streaks_stream(events_stream)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )

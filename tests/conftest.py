@@ -14,53 +14,41 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
 
 # ---------------------------------------------------------------------
-# Gate tier vs full tier (VERDICT r9 #1): the suite outgrew the driver's
-# pytest window (1023 tests / ~31-38 min; the r9 gate run was cut at
-# ~92% with ZERO failures). The default run is now a <15-min GATE tier;
-# SPARK_GRAFT_FULL_TESTS=1 restores the exhaustive tier (run per round
-# by the builder — round 10's full run: 1023 passed, 2 env-gated skips).
+# Gate tier vs full tier (VERDICT r9 #1): the default run is the GATE
+# tier, sized to sit well inside the Tier-1 pytest window;
+# SPARK_GRAFT_FULL_TESTS=1 runs the exhaustive tier as well.
 #
-# What the gate drops, by measured cost (--durations=0, 2026-08-18 run):
-# - @pytest.mark.full files/tests: property sweeps (test_properties,
-#   290s), synthetic-scale runs (test_synthetic_scale, 234s), the
-#   405-query execute-all smoke (test_all_queries_run, 257s — replaced
-#   in the gate by the always-on analysis smoke
-#   test_all_queries_construct), one scale pin (ann_k_sweep cap, 26s).
-# - GATE_SLOW_TESTS: the >=8s streaming equals-batch suites (~330s);
-#   the sub-8s streaming behavior tests still run in the gate.
+# What the gate drops:
+# - @pytest.mark.full files/tests (costs from a --durations=0 run,
+#   2026-08-18): property sweeps (test_properties, 290s),
+#   synthetic-scale runs (test_synthetic_scale, 234s), the 405-query
+#   execute-all smoke (test_all_queries_run, 257s — replaced in the gate
+#   by the always-on analysis smoke test_all_queries_construct), one
+#   scale pin (ann_k_sweep cap, 26s).
+# - GATE_SLOW_TESTS: six streaming tests that each run 8s or more
+#   (~130s together in a full-tier run): the mapper -> FileTopic ->
+#   reducer topology, the T6 rate and T7 running-total invariant, the
+#   watermark pin on closed windows, the two window-start-key
+#   equivalence pins, and the event-time-timer sessionizer
+#   (transformWithState). The sub-8s streaming tests still run in the
+#   gate.
 # - test_parity[*]: the gate keeps a DETERMINISTIC subset — every query
 #   whose md5(name) % 4 == 0 (~quarter of 405) plus every query touched
 #   by the r9/r10 optimization rounds (PARITY_FRESH) — ~130 exact
 #   oracle comparisons (~2.5 min). The driver's own oracle check plus
 #   the per-round full drives (405/405 MATCH artifacts) carry the
 #   exhaustive signal.
+#
+# tests/test_gate_lists.py checks that every GATE_SLOW_TESTS entry
+# names a test that exists and every PARITY_FRESH entry a registered
+# query, with no duplicates in either literal.
 GATE_SLOW_TESTS = {
-    "test_streaming.py::test_lsh_ingest_stream_matches_sequential_batch",
     "test_streaming.py::test_two_stage_topology_through_topic",
-    "test_streaming.py::test_attribution_join_stream_equals_batch",
-    "test_streaming.py::test_attribution_join_state_evicted_past_watermark",
-    "test_streaming.py::test_session_timer_stream_equals_batch",
-    "test_streaming.py::test_sessionize_stream_closes_by_gap_and_timeout",
-    "test_streaming.py::test_favorite_type_stream_equals_batch",
-    "test_streaming.py::test_streak_maintain_stream_equals_batch",
-    "test_streaming.py::test_rolling_spend_stream_equals_batch",
-    "test_streaming.py::test_topk_maintain_space_saving_guarantees",
-    "test_streaming.py::test_histogram_maintain_stream_equals_batch",
-    "test_streaming.py::test_wau_estimates_from_day_sketches",
-    "test_streaming.py::test_hll_maintain_stream_equals_batch",
-    "test_streaming.py::test_stream_stream_left_outer_emits_unmatched_after_watermark",
-    "test_streaming.py::test_cms_maintain_stream_equals_batch",
-    "test_streaming.py::test_funnel_stream_matches_greedy_batch_reference",
-    "test_streaming.py::test_cusum_stream_matches_batch_fold",
-    "test_streaming.py::test_session_agg_late_event_cannot_reopen_closed_session",
-    "test_streaming.py::test_ema_stream_matches_batch_fold",
-    "test_streaming.py::test_heavy_hitters_stream_spacesaving_guarantees",
-    "test_streaming.py::test_stream_stream_interval_join_matches_batch",
-    "test_streaming.py::test_session_agg_stream_equals_batch",
+    "test_streaming.py::test_running_total_and_rate_invariant",
     "test_streaming.py::test_watermark_protects_closed_windows",
     "test_streaming.py::test_window_start_key_matches_struct_window_key",
     "test_streaming.py::test_window_start_key_never_closes_earlier_than_struct_key",
-    "test_streaming.py::test_running_total_and_rate_invariant",
+    "test_streaming.py::test_session_timer_stream_equals_batch",
 }
 
 # queries rewritten/re-plumbed in optimization rounds 9-10: their exact

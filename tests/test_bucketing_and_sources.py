@@ -177,114 +177,6 @@ def test_dynamic_partition_overwrite_backfills_one_day(spark, tables, tmp_path):
     assert all(r["value"] == orig[r["event_id"]] * 2 for r in changed)
 
 
-# ---------------------------------------------------------------- kafka
-
-
-def test_kafka_envelope_roundtrip_batch(spark):
-    """encode -> decode over the JSON envelope must be lossless for the
-    knob message shape (the part of the Kafka binding that is pure
-    DataFrame transform — broker-independent)."""
-    from pubsub_mapreduce_spark.sources.topic import (
-        decode_kafka_envelope,
-        encode_kafka_envelope,
-    )
-
-    src = spark.createDataFrame(
-        [(1, 17, "2024-03-01 10:00:00"), (2, 0, "2024-03-01 10:00:01")],
-        "id long, n long, ts_s string",
-    )
-    wire = encode_kafka_envelope(src, key="id")
-    assert wire.columns == ["key", "value"]
-    assert dict(wire.dtypes)["value"] == "binary"
-    back = decode_kafka_envelope(wire, "id long, n long, ts_s string")
-    assert sorted(back.collect()) == sorted(src.collect())
-
-
-def test_kafka_envelope_key_affinity(spark):
-    """Same-id messages must serialize to the same key bytes — the
-    per-partition ordering contract rides on key equality."""
-    from pyspark.sql import functions as F
-
-    from pubsub_mapreduce_spark.sources.topic import encode_kafka_envelope
-
-    src = spark.createDataFrame([(7, "a"), (7, "b"), (8, "c")], "id long, v string")
-    keys = (
-        encode_kafka_envelope(src, key="id")
-        .groupBy("key")
-        .count()
-        .orderBy("key")
-        .collect()
-    )
-    assert [(bytes(r["key"]).decode(), r["count"]) for r in keys] == [
-        ("7", 2),
-        ("8", 1),
-    ]
-
-
-def test_kafka_envelope_poison_payload_nulls(spark):
-    """Malformed JSON in value must decode to NULL columns (recover-and-
-    ack), never raise."""
-    from pubsub_mapreduce_spark.sources.topic import decode_kafka_envelope
-
-    wire = spark.createDataFrame(
-        [(bytearray(b'{"id": 1, "n": 2}'),), (bytearray(b"not json"),)],
-        "value binary",
-    )
-    rows = decode_kafka_envelope(wire, "id long, n long").orderBy(
-        "id", ascending=False
-    ).collect()
-    assert (rows[0]["id"], rows[0]["n"]) == (1, 2)
-    assert rows[1]["id"] is None and rows[1]["n"] is None
-
-
-def test_kafka_envelope_through_file_stream(spark, tmp_path):
-    """The stream==batch pin over the envelope: rows published through
-    the JSON envelope into a FILE topic (standing in for the broker's
-    log) and re-decoded by a streaming read equal the batch originals —
-    proving the binding swap is invisible to downstream operators."""
-    from pubsub_mapreduce_spark.sources.knobs import knob_batch
-    from pubsub_mapreduce_spark.sources.topic import (
-        FileTopic,
-        decode_kafka_envelope,
-        encode_kafka_envelope,
-    )
-
-    src = knob_batch(spark, n=500, ticks=5).select("id", "n")
-    t = FileTopic(str(tmp_path / "wire"))
-    t.publish(encode_kafka_envelope(src, key="id"))
-    stream = t.subscribe(spark, "key binary, value binary")
-    decoded = decode_kafka_envelope(stream, "id long, n long")
-    q = (
-        decoded.writeStream.format("memory")
-        .queryName("kafka_env_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = sorted(
-        (r["id"], r["n"])
-        for r in spark.sql("select * from kafka_env_stream").collect()
-    )
-    assert got == sorted((r["id"], r["n"]) for r in src.collect())
-
-
-def test_kafka_topic_gated_without_connector(spark):
-    """No connector jar in the sandbox: every broker-touching verb must
-    fail fast with the actionable message, not a py4j stack trace."""
-    import pytest
-
-    from pubsub_mapreduce_spark.sources.topic import KafkaTopic, kafka_available
-
-    t = KafkaTopic("localhost:9092", "knobs")
-    if kafka_available(spark):
-        pytest.skip("connector present — gate not exercisable")
-    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        t.subscribe(spark, "id long")
-    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        t.publish(spark.range(1))
-
-
 def test_jsonl_ingest_quarantines_poison_lines(spark, tmp_path):
     """C1 analogue (knobs.go:85-90): malformed lines never fail the job —
     they land, accounted, in the quarantine side with the raw text kept;

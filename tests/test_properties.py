@@ -415,52 +415,6 @@ def test_logrank_matches_python_reference(spark, users):
         assert abs(r["chi2"] - (o1 - e1) ** 2 / v) < 1e-9
 
 
-# space-saving merge: random streams, random batch splits — the
-# deterministic guarantees must hold for EVERY batching
-ss_stream = st.lists(
-    st.tuples(st.integers(0, 11), st.integers(1, 3)),
-    min_size=1,
-    max_size=60,
-)
-
-
-@PROP
-@given(items=ss_stream, nsplits=st.integers(1, 4), k=st.integers(2, 4))
-def test_space_saving_bounds_any_batching(spark, tmp_path_factory, items, nsplits, k):
-    from collections import Counter
-
-    from pubsub_mapreduce_spark.streaming.topk_maintain import (
-        TopKMaintain,
-        topk,
-    )
-
-    store = str(tmp_path_factory.mktemp("ss"))
-    handler = TopKMaintain(store, key="k", group="g", k=k)
-    rows = [("g", str(key)) for key, rep in items for _ in range(rep)]
-    chunk = (len(rows) + nsplits - 1) // nsplits
-    schema = "g string, k string"
-    bid = 0
-    for i in range(nsplits):
-        part = rows[i * chunk : (i + 1) * chunk]
-        if part:
-            handler(spark.createDataFrame(part, schema), bid)
-            bid += 1
-    exact = Counter(kk for _, kk in rows)
-    n_total = len(rows)
-    got = topk(spark, store).collect()
-    assert 0 < len(got) <= k
-    reported = set()
-    for r in got:
-        reported.add(r["key"])
-        true = exact.get(r["key"], 0)
-        # overcount-only with recorded error
-        assert r["cnt_lo"] <= true <= r["cnt"], (r, true)
-    # classic guarantee: true frequency > N/k is always tracked
-    for key, n in exact.items():
-        if n > n_total / k:
-            assert key in reported, (key, n, n_total, k, got)
-
-
 # asof_join vs pandas merge_asof: random NULL patterns in value columns
 # must never stitch fields across right rows (the round-4 single-struct
 # carry fix); unique right times sidestep pandas' tie ordering.

@@ -7,10 +7,7 @@
 3. dsir_score must Laplace-smooth tokens whose buckets are absent from
    the model (left join + coalesce, dense-model totals) and count them
    in n_toks.
-4. The *_maintain stores must survive a crash mid-persist: the previous
-   snapshot stays live until the new one's pointer flip (versioned
-   store, atomic os.replace).
-5. interval_overlap_join must NOT match degenerate (empty) intervals.
+4. interval_overlap_join must NOT match degenerate (empty) intervals.
 """
 
 from __future__ import annotations
@@ -167,37 +164,6 @@ def test_dsir_score_unseen_buckets_laplace(spark):
     )
     want = round((toks["st"] * nr) / (toks["sr"] * nt), 6)
     assert abs(out[0]["importance"] - want) < 1e-9
-
-
-def test_store_crash_mid_write_keeps_previous_snapshot(spark, tmp_path):
-    """Kill the write after the new version dir exists but BEFORE the
-    pointer flip: the store must still read the previous snapshot."""
-    import os
-
-    from pubsub_mapreduce_spark.streaming.store import (
-        store_exists,
-        store_read,
-        store_write,
-    )
-
-    base = str(tmp_path / "sk")
-    df1 = spark.createDataFrame([("a", 1)], "g string, cnt long")
-    store_write(spark, df1.collect(), df1.schema, base, 0)
-    assert store_exists(base)
-    # simulate the crashed attempt: version dir written, pointer not
-    df2 = spark.createDataFrame([("a", 2)], "g string, cnt long")
-    df2.coalesce(1).write.parquet(os.path.join(base, "v1"))
-    got = store_read(spark, base).collect()
-    assert [(r["g"], r["cnt"]) for r in got] == [("a", 1)]
-    # the replayed batch re-runs store_write for the same version: the
-    # stale dir is replaced and the flip lands
-    store_write(spark, df2.collect(), df2.schema, base, 1)
-    got = store_read(spark, base).collect()
-    assert [(r["g"], r["cnt"]) for r in got] == [("a", 2)]
-    # pruning keeps at most current + previous
-    store_write(spark, df1.collect(), df1.schema, base, 2)
-    vdirs = sorted(d for d in os.listdir(base) if d.startswith("v"))
-    assert vdirs == ["v1", "v2"]
 
 
 def test_skyline_oracle_window_form_equals_not_exists():

@@ -1,103 +1,10 @@
-"""Round-5 ADVICE regression pins.
-
-1. streaming/store.py flip-then-crash window (ADVICE r4 medium): a
-   crash BETWEEN the CURRENT pointer flip and the caller's ledger mark
-   must not double-count on replay — the pointer is the commit record —
-   and the committed live snapshot directory must never be deleted for
-   a rebuild (a second crash mid-rewrite would leave the pointer
-   dangling at a deleted directory).
-2. robust.spearman_types day-intersection (ADVICE r4 low): ranks must
-   be computed over the SHARED day calendar, so the paired ranks are a
-   permutation of 1..n of the common subset even when the two types'
-   calendars differ.
+"""Round-5 ADVICE regression pin: robust.spearman_types
+day-intersection (ADVICE r4 low): ranks must be computed over the
+SHARED day calendar, so the paired ranks are a permutation of 1..n of
+the common subset even when the two types' calendars differ.
 """
 
 from __future__ import annotations
-
-import os
-
-import pyspark.sql.functions as F
-
-
-def test_store_write_refuses_to_rebuild_committed_version(spark, tmp_path):
-    from pubsub_mapreduce_spark.streaming.store import (
-        store_committed,
-        store_read,
-        store_write,
-    )
-
-    base = str(tmp_path / "sk")
-    df1 = spark.createDataFrame([("a", 1)], "g string, cnt long")
-    store_write(spark, df1.collect(), df1.schema, base, 0)
-    df2 = spark.createDataFrame([("a", 3)], "g string, cnt long")
-    store_write(spark, df2.collect(), df2.schema, base, 1)
-    assert store_committed(base, 1)
-    # replay of batch 1 after the flip: the caller would have re-merged
-    # the delta against the already-merged snapshot (a=3+2=5). The store
-    # must refuse the rewrite — snapshot keeps the committed value.
-    bogus = spark.createDataFrame([("a", 5)], "g string, cnt long")
-    store_write(spark, bogus.collect(), bogus.schema, base, 1)
-    got = store_read(spark, base).collect()
-    assert [(r["g"], r["cnt"]) for r in got] == [("a", 3)]
-    # and the committed v1 directory was never deleted
-    assert os.path.isdir(os.path.join(base, "v1"))
-
-
-def test_histogram_maintain_replay_after_flip_before_mark(spark, tmp_path):
-    """Simulate the exact ADVICE crash: batch merged + pointer flipped,
-    ledger mark lost. Replay must re-mark WITHOUT re-merging."""
-    from pubsub_mapreduce_spark.streaming.histogram_maintain import (
-        HistogramMaintain,
-    )
-
-    h = HistogramMaintain(str(tmp_path / "st"), value="value", group="g")
-    batch = spark.createDataFrame(
-        [("a", 1.0), ("a", 1.0), ("b", 2.0)], "g string, value double"
-    )
-    h(batch, 0)
-    h(batch, 1)  # second batch merges on top
-    before = sorted(
-        (r["g"], r["bucket"], r["cnt"])
-        for r in spark.read.parquet(
-            os.path.join(str(tmp_path / "st"), "histogram", "v1")
-        ).collect()
-    )
-    # crash window: wipe the ledger mark for batch 1, pointer stays
-    os.remove(os.path.join(h.ledger_dir, "1.done"))
-    h(batch, 1)  # replay
-    from pubsub_mapreduce_spark.streaming.histogram_maintain import histogram
-
-    after = sorted(
-        (r["g"], r["bucket"], r["cnt"])
-        for r in histogram(spark, str(tmp_path / "st")).collect()
-    )
-    assert after == before  # no double count
-    assert os.path.exists(os.path.join(h.ledger_dir, "1.done"))  # re-marked
-    # counts are exactly 2 batches' worth
-    assert after == [("a", 1, 4), ("b", 2, 2)]
-
-
-def test_topk_maintain_replay_after_flip_before_mark(spark, tmp_path):
-    from pubsub_mapreduce_spark.streaming.topk_maintain import (
-        TopKMaintain,
-        topk,
-    )
-
-    m = TopKMaintain(str(tmp_path / "st"), k=4, group="g", key="u")
-    batch = spark.createDataFrame(
-        [("a", 1), ("a", 1), ("a", 2), ("b", 3)], "g string, u long"
-    )
-    m(batch, 0)
-    snap = lambda: sorted(  # noqa: E731
-        (r["group"], r["key"], r["cnt"])
-        for r in topk(spark, str(tmp_path / "st")).collect()
-    )
-    before = snap()
-    os.remove(os.path.join(m.ledger_dir, "0.done"))
-    m(batch, 0)  # replay after flip-before-mark crash
-    after = snap()
-    assert after == before
-    assert os.path.exists(os.path.join(m.ledger_dir, "0.done"))
 
 
 def test_spearman_types_uses_shared_day_calendar(spark):
