@@ -262,8 +262,6 @@ def _jaccard_verify(
     cands: DataFrame,
     shingles: DataFrame,
     threshold: float,
-    partner_text: DataFrame | None = None,
-    n: int = 3,
 ) -> DataFrame:
     """(new_id, dup_of, jaccard) for the candidate pairs whose exact
     shingle-set Jaccard reaches ``threshold``: |A ∩ B| is the size of
@@ -274,24 +272,12 @@ def _jaccard_verify(
 
     Each doc's set is ONE ``collect_set`` over the raw (doc_id,
     shingle) relation ``shingles``; both joins read those sets through
-    identical plans, so AQE shares their exchange. With
-    ``partner_text`` ((doc_id, text) rows) the dup_of side is built from
-    text instead: the join prunes that text to candidate partners and
-    each partner's n-gram set is computed after it — the indexed
-    incremental form, whose corpus has no shingle relation to read."""
+    identical plans, so AQE shares their exchange."""
     sets = shingles.groupBy("doc_id").agg(F.collect_set("shingle").alias("s"))
     sn = sets.select(F.col("doc_id").alias("new_id"), F.col("s").alias("sn"))
-    pairs = cands.join(sn, "new_id")
-    if partner_text is None:
-        pairs = pairs.join(
-            sets.select(F.col("doc_id").alias("dup_of"), F.col("s").alias("so")), "dup_of"
-        )
-    else:
-        pairs = pairs.join(
-            partner_text.select(F.col("doc_id").alias("dup_of"), "text"), "dup_of"
-        ).withColumn(
-            "so", F.array_distinct(F.filter(_grams("text", n), lambda g: g != ""))
-        )
+    pairs = cands.join(sn, "new_id").join(
+        sets.select(F.col("doc_id").alias("dup_of"), F.col("s").alias("so")), "dup_of"
+    )
     common = F.size(F.array_intersect("sn", "so"))
     return (
         pairs.select(
@@ -668,26 +654,6 @@ def incremental_dedup(new_docs: DataFrame, corpus: DataFrame) -> DataFrame:
     return batch_unique.join(corpus_hashes, "content_md5", "left_anti")
 
 
-def build_minhash_index(
-    corpus: DataFrame,
-    n: int = 3,
-    n_perm: int = N_PERM,
-    bands: int = LSH_BANDS,
-    seed: int = 42,
-) -> DataFrame:
-    """The precomputed corpus side of ``minhash_lsh_incremental``:
-    (doc_id, band, bucket) banded rows. Build once, persist with
-    ``io.write_bucketed(idx, table, ["band", "bucket"])`` so every
-    future ingest batch's candidate join is co-located on the bucket
-    key — the corpus TEXT is then touched only for verify candidates.
-    Grows append-only: index a new batch after admitting it and union
-    (no rebuild)."""
-    from ..io import widen
-
-    sig = minhash_signatures(widen(corpus, 8), n=n, n_perm=n_perm, seed=seed)
-    return _banded(sig, bands, n_perm // bands)
-
-
 def minhash_lsh_incremental(
     new_docs: DataFrame,
     corpus: DataFrame,
@@ -696,7 +662,6 @@ def minhash_lsh_incremental(
     bands: int = LSH_BANDS,
     threshold: float = 0.5,
     seed: int = 42,
-    corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup: the new-crawl-vs-existing-corpus form of
     ``minhash_lsh_pairs`` — the production shape for a growing 100TB
@@ -715,59 +680,31 @@ def minhash_lsh_incremental(
     cap counts every member of a kept bucket, so it equals the
     full-corpus cap restricted to the batch's buckets.
 
-    Index-less form (``corpus_index=None``): without a stored corpus
-    index both sides must be signed anyway, so this computes ONE
-    shingle pass + ONE signature aggregate over the tagged union
-    (``carry=('is_new',)`` threads the membership flag through
-    explode/groupBy — no |docs|-sized join back); the verify's shingle
-    sets come from that same shingle pass.
-
-    Indexed form (``corpus_index`` = ``build_minhash_index`` output,
-    typically read back from a (band, bucket)-bucketed table): the
-    corpus is neither shingled nor signed — only the BATCH is, and the
-    corpus text is scanned once, joined to the candidate pairs: only
-    candidate partners' n-gram sets are built. This is the
-    steady-state 100TB ingest plan; results are pinned identical to the
-    index-less form (tests/test_minhash_recall.py).
+    Both sides must be signed, so this computes ONE shingle pass + ONE
+    signature aggregate over the tagged union (``carry=('is_new',)``
+    threads the membership flag through explode/groupBy — no
+    |docs|-sized join back); the verify's shingle sets come from that
+    same shingle pass.
     """
     from ..io import widen
 
     rows_per_band = n_perm // bands
-    if corpus_index is None:
-        tagged = widen(new_docs, 8).withColumn("is_new", F.lit(True)).unionByName(
-            widen(corpus, 8).withColumn("is_new", F.lit(False))
-        )
-        # feeds the signature aggregate and the verify's shingle sets,
-        # uncached for the reasons given in minhash_lsh_pairs
-        sh = word_shingles(tagged, n=n, distinct=False, carry=("is_new",))
-        sig = minhash_signatures(
-            tagged,
-            n=n,
-            n_perm=n_perm,
-            seed=seed,
-            shingles=sh,
-            carry=("is_new",),
-        )
-        cands = _lsh_candidates(_banded(sig, bands, rows_per_band, carry=("is_new",)))
-        return _jaccard_verify(cands, sh, threshold)
-    new8 = widen(new_docs, 8)
-    sh_new = word_shingles(new8, n=n, distinct=False)
-    sig_new = minhash_signatures(new8, n=n, n_perm=n_perm, seed=seed, shingles=sh_new)
-    cands = _lsh_candidates(
-        _banded(sig_new, bands, rows_per_band)
-        .withColumn("is_new", F.lit(True))
-        .unionByName(
-            corpus_index.select("doc_id", "band", "bucket").withColumn(
-                "is_new", F.lit(False)
-            )
-        )
+    tagged = widen(new_docs, 8).withColumn("is_new", F.lit(True)).unionByName(
+        widen(corpus, 8).withColumn("is_new", F.lit(False))
     )
-    # the one corpus-text read, pruned by the verify join to candidate
-    # partners (earlier new docs are partners too)
-    partners = new_docs.select("doc_id", "text").unionByName(
-        corpus.select("doc_id", "text")
+    # feeds the signature aggregate and the verify's shingle sets,
+    # uncached for the reasons given in minhash_lsh_pairs
+    sh = word_shingles(tagged, n=n, distinct=False, carry=("is_new",))
+    sig = minhash_signatures(
+        tagged,
+        n=n,
+        n_perm=n_perm,
+        seed=seed,
+        shingles=sh,
+        carry=("is_new",),
     )
-    return _jaccard_verify(cands, sh_new, threshold, partners, n)
+    cands = _lsh_candidates(_banded(sig, bands, rows_per_band, carry=("is_new",)))
+    return _jaccard_verify(cands, sh, threshold)
 
 
 def duplicate_substring_spans(

@@ -1725,21 +1725,42 @@ def duckdb_pq_sql(
     """
 
 
-def build_ivfpq_index(
+def ann_ivfpq_topk(
     emb: DataFrame,
+    k: int = 5,
+    every: int = 50,
     centroid_every: int = 100,
+    nprobe: int = 5,
     n_max_centroids: int = 512,
     code_every: int = 100,
     n_codes: int = N_CODES,
     cents: list | None = None,
     seeds: list | None = None,
     corpus: DataFrame | None = None,
-):
-    """Build the IVF+PQ index: (centroid literals, PQ seed codebook,
-    and the stored index relation (vec_id, cid, codes)) — ONE map-only
-    corpus projection computes cell assignment and codes together.
-    The returned relation is what a warehouse persists (bucketed by
-    cid); searches never touch raw vectors again."""
+    precomputed_count: int | None = None,
+    _scored: bool = False,
+) -> DataFrame:
+    """IVF+PQ — the composition a billion-vector index actually runs
+    (the FAISS IVFPQ shape): centroid cells prune the candidate set to
+    ``nprobe`` inverted lists, and within each probed cell the scan
+    reads 8-byte PQ codes instead of 256-byte float vectors, scoring
+    by asymmetric distance. Cells cut WORK, codes cut BYTES — at 100TB
+    the index fits in a fraction of the corpus footprint and each
+    query touches nprobe/|C| of it.
+
+    Everything deterministic and value-hash-oracled end to end
+    (``duckdb_ivfpq_sql``): literal-argmax cell assignment (cosine,
+    ties to smaller cid), PQ argmin encoding (ties to smaller code),
+    sequence-mirrored ADC arithmetic, (adist asc, neighbor asc)
+    ranking.
+
+    One map-only corpus projection computes cell assignment and codes
+    together: the (vec_id, cid, codes) relation is what a warehouse
+    persists (bucketed by cid), and searches never touch raw vectors
+    again. Probe selection and the ADC LUT are map-only against plan
+    literals; the only joins ride cid (broadcast probe side) and the
+    only keyed exchange is the per-query top-k."""
+    from ..functions.text import round_half_up
     from ..io import widen
 
     e0 = (
@@ -1758,25 +1779,13 @@ def build_ivfpq_index(
         best["cid"].alias("cid"),
         _pq_codes_expr(seeds).alias("codes"),
     )
-    return cents, seeds, assigned
-
-
-def ivfpq_search(
-    queries: DataFrame,
-    cents,
-    seeds,
-    assigned: DataFrame,
-    k: int = 5,
-    nprobe: int = 5,
-    _scored: bool = False,
-) -> DataFrame:
-    """Search an IVF+PQ index for a (query_id, q_emb) relation: probe
-    selection and the ADC LUT are map-only against plan literals; the
-    only joins ride cid (broadcast probe side) and the only keyed
-    exchange is the per-query top-k."""
-    from ..functions.text import round_half_up
-
-    q = queries.withColumn("lut", F.expr(_pq_lut_expr(seeds)))
+    q = (
+        query_subset(e0, every, precomputed_count=precomputed_count)
+        .select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+        )
+        .withColumn("lut", F.expr(_pq_lut_expr(seeds)))
+    )
     probes = (
         q.select(
             "query_id", "lut", F.explode(_centroid_sims(cents, "q_emb")).alias("pr")
@@ -1821,55 +1830,6 @@ def ivfpq_search(
             "rank",
             round_half_up(F.col("adist"), 4).alias("adist"),
         )
-    )
-
-
-def ann_ivfpq_topk(
-    emb: DataFrame,
-    k: int = 5,
-    every: int = 50,
-    centroid_every: int = 100,
-    nprobe: int = 5,
-    n_max_centroids: int = 512,
-    code_every: int = 100,
-    n_codes: int = N_CODES,
-    cents: list | None = None,
-    seeds: list | None = None,
-    corpus: DataFrame | None = None,
-    precomputed_count: int | None = None,
-    _scored: bool = False,
-) -> DataFrame:
-    """IVF+PQ — the composition a billion-vector index actually runs
-    (the FAISS IVFPQ shape): centroid cells prune the candidate set to
-    ``nprobe`` inverted lists, and within each probed cell the scan
-    reads 8-byte PQ codes instead of 256-byte float vectors, scoring
-    by asymmetric distance. Cells cut WORK, codes cut BYTES — at 100TB
-    the index fits in a fraction of the corpus footprint and each
-    query touches nprobe/|C| of it.
-
-    Everything deterministic and value-hash-oracled end to end
-    (``duckdb_ivfpq_sql``): literal-argmax cell assignment (cosine,
-    ties to smaller cid), PQ argmin encoding (ties to smaller code),
-    sequence-mirrored ADC arithmetic, (adist asc, neighbor asc)
-    ranking. Index build and search are the factored
-    ``build_ivfpq_index`` / ``ivfpq_search``."""
-    cents, seeds, assigned = build_ivfpq_index(
-        emb, centroid_every, n_max_centroids, code_every, n_codes,
-        cents=cents, seeds=seeds, corpus=corpus,
-    )
-    e0 = (
-        corpus
-        if corpus is not None
-        else _as_double(emb).select("vec_id", "embedding")
-    )
-    queries = query_subset(
-        e0, every, precomputed_count=precomputed_count
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    return ivfpq_search(
-        queries, cents, seeds, assigned, k=k, nprobe=nprobe,
-        _scored=_scored,
     )
 
 

@@ -59,30 +59,3 @@ def test_incremental_equals_full_restricted(spark, docs_med):
     assert got == expected
     assert all(r["new_id"] in new_ids for r in
                minhash_lsh_incremental(new_batch, corpus).collect())
-
-
-def test_indexed_incremental_equals_indexless(spark, docs_med):
-    """The stored-index ingest path (build_minhash_index -> bucketed
-    table -> minhash_lsh_incremental(corpus_index=...)) must produce
-    byte-identical pairs to the index-less form — the corpus is never
-    shingled or signed, only scanned once for verify candidates."""
-    from pyspark.sql import functions as F
-
-    from pubsub_mapreduce_spark.io import write_bucketed
-    from pubsub_mapreduce_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_lsh_incremental,
-    )
-
-    corpus = docs_med.where(F.col("doc_id") % 10 < 8)
-    new_batch = docs_med.where(F.col("doc_id") % 10 >= 8)
-    idx = build_minhash_index(corpus)
-    write_bucketed(idx, "mh_index_test", ["band", "bucket"], n_buckets=8)
-    stored = spark.table("mh_index_test")
-    key = lambda r: (r["new_id"], r["dup_of"], r["jaccard"])
-    got = sorted(
-        map(key, minhash_lsh_incremental(
-            new_batch, corpus, corpus_index=stored).collect())
-    )
-    ref = sorted(map(key, minhash_lsh_incremental(new_batch, corpus).collect()))
-    assert got == ref and got, "indexed path must match and be non-empty"

@@ -9,7 +9,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from pubsub_mapreduce_spark.io import load_tables, write_bucketed
+from pubsub_mapreduce_spark.io import load_tables
 from pubsub_mapreduce_spark.operators import dedup
 from pubsub_mapreduce_spark.operators import similarity as S
 from pubsub_mapreduce_spark.plans.explain import (
@@ -37,24 +37,15 @@ def _partial_min_aggregates(df) -> int:
 
 
 def test_minhash_lsh_forms_sign_once(spark, docs_med):
-    """The pair form and both incremental forms each run ONE signature
+    """The pair form and the incremental form each run ONE signature
     aggregate, with pinned keyed shuffle counts: signatures, buckets, candidate distinct, and the
     shingle-set aggregate per verify side (AQE reuses the second at run
-    time); the indexed form has no corpus-side set aggregate."""
+    time)."""
     corpus = docs_med.where(F.col("doc_id") % 10 < 8)
     new_batch = docs_med.where(F.col("doc_id") % 10 >= 8)
-    write_bucketed(
-        dedup.build_minhash_index(corpus), "mh_index_shape", ["band", "bucket"], n_buckets=8
-    )
     forms = {
         "pairs": (dedup.minhash_lsh_pairs(docs_med), 5),
         "incremental": (dedup.minhash_lsh_incremental(new_batch, corpus), 5),
-        "indexed": (
-            dedup.minhash_lsh_incremental(
-                new_batch, corpus, corpus_index=spark.table("mh_index_shape")
-            ),
-            4,
-        ),
     }
     for name, (df, shuffles) in forms.items():
         assert _partial_min_aggregates(df) == 1, name

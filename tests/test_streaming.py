@@ -886,9 +886,7 @@ def test_streaks_batch_gaps_and_islands_semantics(spark):
     the island ending at the user's LATEST purchase day."""
     import datetime
 
-    from pubsub_mapreduce_spark.streaming.streak_maintain import (
-        streaks_batch,
-    )
+    from pubsub_mapreduce_spark.operators.relational import streaks_batch
 
     base = datetime.datetime(2024, 5, 1, 12)
     day = datetime.timedelta(days=1)

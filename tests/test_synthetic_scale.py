@@ -126,13 +126,10 @@ def test_vocab_coverage_at_scale_is_complete_curve(spark, big_docs):
 def test_minhash_incremental_at_scale_resolves_planted_batch(spark, big_docs):
     """Incremental near-dup at 10x: a 40-doc ingest batch (20 perturbed
     copies of corpus docs + 20 genuinely new) against the 20k corpus
-    with a PREBUILT index — every copy must resolve to its source,
-    every new doc must pass clean, and the candidate work must ride the
-    touched-bucket restriction (no all-pairs, no corpus re-sign)."""
-    from pubsub_mapreduce_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_lsh_incremental,
-    )
+    — every copy must resolve to its source, every new doc must pass
+    clean, and the candidate work must ride the touched-bucket
+    restriction (no all-pairs)."""
+    from pubsub_mapreduce_spark.operators.dedup import minhash_lsh_incremental
     from pubsub_mapreduce_spark.plans.explain import assert_no_cartesian
 
     copies = big_docs.where(F.col("doc_id") < 20).select(
@@ -153,8 +150,7 @@ def test_minhash_incremental_at_scale_resolves_planted_batch(spark, big_docs):
         F.lit(40).alias("n_chars"),
     )
     batch = copies.unionByName(fresh)
-    idx = build_minhash_index(big_docs)
-    out = minhash_lsh_incremental(batch, big_docs, corpus_index=idx)
+    out = minhash_lsh_incremental(batch, big_docs)
     assert_no_cartesian(out)
     got = {(r["new_id"], r["dup_of"]) for r in out.collect()}
     assert {(i + 1_000_000, i) for i in range(20)} <= got

@@ -4,7 +4,7 @@ The correctness sweep proves the ANSWERS; this artifact proves the
 PLANS — for each ``queries()`` entry at sf0.001 (plan shape is
 SF-independent; the tiny fixture keeps analysis fast), one line:
 
-    name  shuffles=K  repeats=R  bcast=B  scans=S  cartesian=Y/N  codegen=C
+    name  shuffles=K  repeats=R  bcast=B  scans=S  cartesian=Y/N  codegen=C  plan=H
 
 where ``shuffles`` counts KEYED exchanges (round-robin widening
 excluded — ``plans.explain.keyed_shuffle_count``), ``repeats`` counts
@@ -14,14 +14,21 @@ computed once per consumer (``plans.explain.repeated_exchanges``),
 ``bcast`` counts
 broadcast joins, ``scans`` counts parquet scan nodes (a query that
 re-scans a table it already aggregated shows up here), ``cartesian``
-flags CartesianProduct nodes, and ``codegen`` counts fused
-whole-stage spans. Two runs' outputs diff line by line, so plan
-regressions (an operator silently gaining a shuffle or losing a
-broadcast) diff like correctness regressions. Run:
+flags CartesianProduct nodes, ``codegen`` counts fused
+whole-stage spans, and ``plan`` is the first 12 hex digits of the sha1
+of the optimized logical plan with expression ids (``#123``) and
+physical plan ids (``plan_id=123``, inside cached relations) stripped,
+so a refactor that builds the same plans diffs clean across the whole
+catalogue. Queries with more than one distinct aggregate get a
+different fingerprint from run to run: Spark numbers the ``Expand``
+groups it rewrites them into in no fixed order. Two runs' outputs diff line by line, so plan regressions (an
+operator silently gaining a shuffle or losing a broadcast) diff like
+correctness regressions. Run:
 
     python tools/plan_audit.py [SF_DIR] [PLANS_LOCAL.txt]
 """
 
+import hashlib
 import re
 import sys
 
@@ -36,6 +43,14 @@ from pubsub_mapreduce_spark.plans.explain import (
 from pubsub_mapreduce_spark.session import get_spark
 
 
+def plan_fingerprint(df) -> str:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    # expression ids and the physical plan ids inside cached relations
+    # come from process-wide counters
+    plan = re.sub(r"#\d+|plan_id=\d+", "", plan)
+    return hashlib.sha1(plan.encode()).hexdigest()[:12]
+
+
 def audit_line(name, df) -> str:
     plan = explain_str(df)
     shuffles = keyed_shuffle_count(df)
@@ -48,7 +63,7 @@ def audit_line(name, df) -> str:
     return (
         f"{name} shuffles={shuffles} repeats={repeated_exchanges(plan)} "
         f"bcast={bcast} scans={scans} "
-        f"cartesian={cartesian} codegen={codegen}"
+        f"cartesian={cartesian} codegen={codegen} plan={plan_fingerprint(df)}"
     )
 
 
