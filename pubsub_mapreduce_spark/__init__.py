@@ -9,7 +9,7 @@ Layout
 - ``functions`` : scalar/codec/text/vector helpers (reference F1-F9 + extras)
 - ``operators`` : batch operator library — the reference pipeline T1-T8,
                   relational query builders, dedup, similarity, multimodal
-- ``sources``   : synthetic knob-stream generators (batch + streaming shims)
+- ``sources``   : knob parse and batch replay, the file-backed topic
 - ``streaming`` : Structured Streaming forms of the reference pipeline
 - ``plans``     : physical-plan introspection helpers (pushdown/broadcast asserts)
 

@@ -4,15 +4,19 @@ All are thin compositions of built-in ``pyspark.sql.functions`` — they stay
 inside whole-stage codegen (no Python UDFs), so they cost nothing at 100TB.
 
 Reference citations:
-- F1 JSON serialize          : knobs.go:72, mapper.go:77, reducer.go:105
-- F2 JSON deserialize typed  : flood.go:68-72, reducer.go:146-150
 - F3 JSON dynamic field pick : knobs.go:93-100
 - F4 int -> hex string       : flood.go:77  (strconv.FormatInt(id, 16))
 - F5 hex string -> int       : mapper.go:99 (strconv.ParseInt(s, 16, 8))
 - F6 base64 encode           : reducer.go:110
 - F7 epoch-float timestamp   : simulate-knobs.go:28,66 (UnixNano()/1e9)
 - F8 sine/mod/floor math     : simulate-knobs.go:66-69, knobs.go:64
-- F9 float -> int64 trunc    : knobs.go:98-99
+
+The rest are one built-in each at their single call site: F1 JSON
+serialize (knobs.go:72, reducer.go:105) is the device sink's
+``json.dumps``, F2 typed JSON parse (flood.go:68-72) is
+``parse_knob_messages``' ``from_json`` over ``KNOBS_SCHEMA``, and F9
+float -> int64 truncation (knobs.go:98-99) is the ``cast("long")`` in
+``sine_wave``.
 """
 
 from __future__ import annotations
@@ -21,13 +25,7 @@ import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 # The reference's wire schemas (SURVEY.md section 1.1), made explicit.
 KNOBS_SCHEMA = StructType(
@@ -37,20 +35,6 @@ KNOBS_SCHEMA = StructType(
         StructField("ts", DoubleType()),  # fractional epoch seconds
     ]
 )
-FLOOD_SCHEMA = StructType([StructField("Ns", ArrayType(LongType()))])
-REDUCER_SCHEMA = StructType([StructField("messages", ArrayType(LongType()))])
-
-
-def to_json_struct(*cols: Column | str) -> Column:
-    """F1: struct -> JSON string (knobs.go:72)."""
-    return F.to_json(F.struct(*cols))
-
-
-def from_json_typed(col: Column | str, schema: StructType) -> Column:
-    """F2: JSON string -> typed struct; unknown fields dropped, missing
-    fields null (flood.go:68-72 drops/zeroes them — we keep null and let
-    callers coalesce, which is the honest Spark semantics)."""
-    return F.from_json(col, schema)
 
 
 def json_field(col: Column | str, path: str) -> Column:
@@ -94,9 +78,3 @@ def sine_wave(t_seconds: Column, amplitude: Column, period_s: Column) -> Column:
     truncated to long as the reference does (float->int cast)."""
     phase = F.pmod(t_seconds, period_s) / period_s
     return (amplitude * F.sin(phase * math.pi)).cast("long")
-
-
-def trunc_long(col: Column | str) -> Column:
-    """F9: float -> int64 truncation-toward-zero (knobs.go:98-99, Go cast)."""
-    c = col if isinstance(col, Column) else F.col(col)
-    return c.cast("long")

@@ -141,7 +141,11 @@ def ngram_jaccard_pairs(
     (optimization r10, guide §2.4). Value-identical by construction:
     word_shingles is deterministic per doc.
     """
-    sh = word_shingles(docs, n=n).cache() if shingles is None else shingles
+    sh = (
+        word_shingles(docs, n=n).localCheckpoint(eager=False)
+        if shingles is None
+        else shingles
+    )
     max_df = 1000
     common_shingles = (
         sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).where(F.col("df") <= max_df)
@@ -1072,22 +1076,19 @@ def dedup_recall_report(
     from pyspark.sql.functions import broadcast
 
     from ..functions.text import round_half_up
-
-    from pyspark import StorageLevel
-
     from ..io import widen
 
     # ONE shingle pass for the whole report (optimization r10, guide
     # §2.4 — VERDICT r9 #4): the exact n-gram side and the MinHash-LSH
     # side each built their OWN tokenize+explode chain (one distinct,
-    # one raw-persisted) over the same corpus. Share the raw multiset
-    # (persisted — feeds the LSH signature aggregate and shingle sets,
-    # and is the source of the distinct set the exact inverted index
-    # checkpoints). Value-identical: word_shingles is deterministic per
-    # doc and min-over-multiset == min-over-set for the signatures.
+    # one raw) over the same corpus. Share the raw multiset
+    # (checkpointed — feeds the LSH signature aggregate and shingle
+    # sets, and is the source of the distinct set the exact inverted
+    # index checkpoints). Value-identical: word_shingles is deterministic
+    # per doc and min-over-multiset == min-over-set for the signatures.
     docs_w = widen(docs, 8)
-    sh_raw = word_shingles(docs_w, n=n, distinct=False).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sh_raw = word_shingles(docs_w, n=n, distinct=False).localCheckpoint(
+        eager=False
     )
     sh_dist = sh_raw.distinct().localCheckpoint(eager=False)
     # each pair relation feeds TWO consumers (its own count + the
@@ -1167,12 +1168,12 @@ def containment_pairs(
     Same inverted-index shape (and max_df skew cap) as
     ngram_jaccard_pairs — shuffle on shingle, pairs only for docs
     sharing one, never a cross product."""
-    # cache the distinct shingle relation (optimization r10, guide
+    # checkpoint the distinct shingle relation (optimization r10, guide
     # §2.4): it feeds the df rollup AND the filtered join, whose three
     # consumers (sizes, a, b) otherwise replay the tokenize+explode+
     # distinct chain 4x — the same discipline ngram_jaccard_pairs
-    # already carries (Dataset.cache == MEMORY_AND_DISK, spills at 100TB)
-    sh = word_shingles(docs, n=n).cache()
+    # already carries
+    sh = word_shingles(docs, n=n).localCheckpoint(eager=False)
     max_df = 1000
     keep = (
         sh.groupBy("shingle")
@@ -1227,7 +1228,7 @@ def tf_cosine_pairs(
     CONSISTENTLY to dots and norms (cosine of the filtered vectors)."""
     from ..functions.text import tokens as _toks
 
-    # cache the tf relation (optimization r10, guide §2.4): it feeds
+    # checkpoint the tf relation (optimization r10, guide §2.4): it feeds
     # the df rollup AND the filtered join, whose three consumers
     # (norms, a, b) otherwise replay the tokenize+explode+aggregate
     # chain — the containment_pairs/ngram_jaccard_pairs discipline
@@ -1237,7 +1238,7 @@ def tf_cosine_pairs(
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
     keep = (
         tf.groupBy("term")

@@ -1841,7 +1841,7 @@ def association_rules(t: Tables) -> DataFrame:
     DIRECTED pairs from a single ordered i!=j expansion (<= |types|^2
     structs per row, constant) so no union-of-orientations re-runs the
     pair aggregate. The sets relation feeds three aggregates (pairs,
-    per-type counts, user total) and is persisted so the user-keyed
+    per-type counts, user total) and is checkpointed so the user-keyed
     shuffle runs once, not per consumer (nominal plan: 10 keyed
     exchanges -> 5). Everything joins back broadcast (|types|-sized
     dims). The |users| x |types| self-join the oracle uses would
@@ -1853,14 +1853,13 @@ def association_rules(t: Tables) -> DataFrame:
     n_both * n_users stays exact to 2^53 (~9e15), plenty under the
     |users| ~ 1e9 design point with bounded |types|.
     """
-    from pyspark import StorageLevel
     from pyspark.sql.functions import broadcast
 
     sets = (
         t["events"]
         .groupBy("user_id")
         .agg(F.array_sort(F.collect_set("event_type")).alias("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     directed = (
         sets.where(F.size("s") >= 2)

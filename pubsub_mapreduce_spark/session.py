@@ -53,14 +53,6 @@ def get_spark(
       drain batch of 40 files a quarter to half a second. ``extra_conf``
       overrides this too.
     """
-    # Before the JVM launches: make google.protobuf importable from
-    # the container's Cloud-SDK copy if no wheel is installed, so the
-    # transformWithState state protocol works in forked Python workers
-    # (they inherit $PYTHONPATH from here). No-op when protobuf exists
-    # or no SDK copy is present; opt out via SPARK_GRAFT_NO_PB_SHIM=1.
-    from .compat import ensure_protobuf
-
-    ensure_protobuf()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -1,15 +1,13 @@
-"""Synthetic knob-stream sources — the reference's simulator
-(simulate-knobs.go) re-expressed as Spark sources.
+"""Knob sources: the reference's simulator (simulate-knobs.go) and the
+knobs subscriber's parse (knobs.go:85-100) re-expressed in Spark.
 
-Two forms:
-- ``knob_stream``: a Structured Streaming source built on the ``rate``
-  source (the test stand-in for a Pub/Sub connector — SURVEY.md section
-  4: the real deployment would swap in a Kafka/Pub/Sub-Lite source with
-  the same output schema, nothing downstream changes).
-- ``knob_batch``: deterministic batch replay of the same generator for
+- ``parse_knob_messages``: wire JSON -> typed knob rows, dropping poison
+  messages; the streaming source is a ``FileTopic`` subscription
+  (``sources/topic.py``) parsed by it.
+- ``knob_batch``: deterministic batch replay of the simulator for
   oracle-checked tests (``spark.range`` + column math, no Python).
 
-Output schema in both: ``id long, n long, ts timestamp`` — the knobs
+Output schema of both: ``id long, n long, ts timestamp`` — the knobs
 wire message (simulate-knobs.go:25-29) with ``ts`` upgraded from
 epoch-double to a real TimestampType at the edge (SURVEY.md section 1.4).
 """
@@ -33,30 +31,6 @@ def _with_knob_value(df: DataFrame, n: int, cycle: bool) -> DataFrame:
     period = (F.col("id") + 1) * CYCLE_BASE_S
     t = F.col("ts").cast("double")
     return df.withColumn("n", sine_wave(t, F.lit(n), period.cast("double")))
-
-
-def knob_stream(
-    spark: SparkSession,
-    n: int = 10000,
-    cycle: bool = False,
-    rows_per_second: int = 20,
-) -> DataFrame:
-    """Streaming knob source: rate-source ticks fanned to TOTAL_KNOBS
-    knobs. Each tick emits one message per knob (the reference staggers
-    cadence per knob at (id+1)x250ms, simulate-knobs.go:80; we keep a
-    uniform tick and note the divergence — cadence shape does not change
-    any downstream operator's semantics)."""
-    base = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .select(
-            F.col("timestamp").alias("ts"),
-            F.explode(F.sequence(F.lit(0), F.lit(TOTAL_KNOBS - 1))).alias("id"),
-        )
-        .select(F.col("id").cast("long").alias("id"), "ts")
-    )
-    return _with_knob_value(base, n, cycle).select("id", "n", "ts")
 
 
 def parse_knob_messages(raw: DataFrame, value_col: str = "value") -> DataFrame:

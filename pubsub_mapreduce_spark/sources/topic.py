@@ -3,7 +3,7 @@ Pub/Sub topics (util/util.go:25-43 get-or-create topic,
 util/util.go:45-70 get-or-create subscription).
 
 A "topic" is an append-only parquet directory; publishing is an
-append write (batch) or an append-mode streaming sink (continuous);
+append write (batch) or an append-mode streaming sink (availableNow);
 subscribing is a file-source streaming read. A broker connector
 would bind to the same call shape — every operator up- and downstream
 sees an identical DataFrame (SURVEY.md §2.1 S1, §4).
@@ -19,8 +19,6 @@ Semantics vs the reference:
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -38,27 +36,18 @@ class FileTopic:
         into the caller's batch boundary)."""
         df.write.mode("append").parquet(self.path)
 
-    def publish_stream(
-        self,
-        df: DataFrame,
-        checkpoint: str,
-        trigger_once: bool = True,
-        processing_time: str | None = None,
-    ) -> StreamingQuery:
-        """Continuous publish: append-mode parquet sink. The micro-batch
-        trigger IS the publish batching (knobs.go:51-55's DelayThreshold
-        == trigger interval)."""
-        w = (
+    def publish_stream(self, df: DataFrame, checkpoint: str) -> StreamingQuery:
+        """Streaming publish: append-mode parquet sink that drains what
+        is available now (``availableNow``). The micro-batch IS the
+        publish batch (knobs.go:51-55's DelayThreshold)."""
+        return (
             df.writeStream.outputMode("append")
             .format("parquet")
             .option("path", self.path)
             .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
         )
-        if processing_time is not None:
-            w = w.trigger(processingTime=processing_time)
-        elif trigger_once:
-            w = w.trigger(availableNow=True)
-        return w.start()
 
     # -- subscribe (S1: the subscription source) -----------------------
 
@@ -79,6 +68,3 @@ class FileTopic:
     def read_batch(self, spark: SparkSession) -> DataFrame:
         """Batch replay of everything ever published."""
         return spark.read.parquet(self.path)
-
-    def exists(self) -> bool:
-        return os.path.isdir(self.path)

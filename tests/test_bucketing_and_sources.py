@@ -1,20 +1,13 @@
-"""Bucketed co-located joins (the 100TB fact-fact join strategy) and
-source-edge semantics: poison-message ingestion (C1) and the live rate
-source (S2/S3)."""
+"""Bucketed co-located joins (the 100TB fact-fact join strategy), lake
+layouts, and the source edge's poison-message rule (C1)."""
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import functions as F
 
 from pubsub_mapreduce_spark.io import write_bucketed
 from pubsub_mapreduce_spark.plans.explain import node_count
-from pubsub_mapreduce_spark.sources.knobs import (
-    TOTAL_KNOBS,
-    knob_stream,
-    parse_knob_messages,
-)
+from pubsub_mapreduce_spark.sources.knobs import parse_knob_messages
 
 
 def test_bucketed_join_has_no_shuffle(spark, tables):
@@ -71,33 +64,6 @@ def test_poison_messages_dropped_not_fatal(spark):
     out = parse_knob_messages(raw).collect()
     assert {(r["id"], r["n"]) for r in out} == {(1, 42), (2, 7)}
     assert all(r["ts"] is not None for r in out)
-
-
-def test_rate_source_knob_stream_live(spark, tmp_path):
-    """S2/S3 live: the rate-source knob stream produces the wire schema
-    and one row per knob per tick, with the constant-n profile."""
-    stream = knob_stream(spark, n=100, rows_per_second=10)
-    assert stream.isStreaming
-    assert [f.name for f in stream.schema.fields] == ["id", "n", "ts"]
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("knobs_live")
-        .trigger(processingTime="250 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 20
-        while time.time() < deadline:
-            if spark.sql("select * from knobs_live").count() >= TOTAL_KNOBS:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    rows = spark.sql("select * from knobs_live").collect()
-    assert len(rows) >= TOTAL_KNOBS
-    assert {r["id"] for r in rows} <= set(range(TOTAL_KNOBS))
-    assert all(r["n"] == 100 for r in rows)
 
 
 def test_partitioned_write_prunes_at_listing_time(spark, tables, tmp_path):
@@ -177,70 +143,6 @@ def test_dynamic_partition_overwrite_backfills_one_day(spark, tables, tmp_path):
     assert all(r["value"] == orig[r["event_id"]] * 2 for r in changed)
 
 
-def test_jsonl_ingest_quarantines_poison_lines(spark, tmp_path):
-    """C1 analogue (knobs.go:85-90): malformed lines never fail the job —
-    they land, accounted, in the quarantine side with the raw text kept;
-    a wrong-typed field poisons its whole line like the reference's
-    panicking callback."""
-    from pubsub_mapreduce_spark.sources.ingest import (
-        quarantine_stats,
-        read_jsonl,
-        split_quarantine,
-    )
-
-    p = tmp_path / "knobs.jsonl"
-    p.write_text(
-        "\n".join(
-            [
-                '{"id": 1, "n": 42, "ts": 1525474779.6}',
-                '{"id": 2, "n": 7, "ts": 1525474780.1}',
-                "{not json at all",
-                '{"id": 3, "n": "abc", "ts": 1525474781.0}',  # wrong type
-                '{"id": 4, "ts": 1525474782.0}',  # missing field: legal JSON
-            ]
-        )
-    )
-    df = read_jsonl(spark, str(p), "id long, n long, ts double")
-    good, bad = split_quarantine(df)
-    g = {r["id"]: r for r in good.collect()}
-    assert set(g) == {1, 2, 4}  # missing field -> null, NOT poison
-    assert g[4]["n"] is None
-    raws = [r["_corrupt_record"] for r in bad.collect()]
-    assert len(raws) == 2 and "{not json at all" in raws
-    s = quarantine_stats(df).first()
-    assert (s["n_lines"], s["n_parsed"], s["n_quarantined"]) == (5, 3, 2)
-
-
-def test_jsonl_stream_matches_batch_quarantine(spark, tmp_path):
-    from pubsub_mapreduce_spark.sources.ingest import (
-        read_jsonl,
-        read_jsonl_stream,
-        split_quarantine,
-    )
-
-    d = tmp_path / "stream"
-    d.mkdir()
-    (d / "a.jsonl").write_text('{"id": 1, "n": 5}\nboom\n{"id": 2, "n": 6}')
-    (d / "b.jsonl").write_text('{"id": 3, "n": 7}\n{"id": 4, "n": "x"}')
-    schema = "id long, n long"
-    stream = read_jsonl_stream(spark, str(d), schema)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("ingest_q")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    q.stop()
-    got = spark.sql("select * from ingest_q")
-    batch = read_jsonl(spark, str(d), schema)
-    for df in (got, batch):
-        good, bad = split_quarantine(df)
-        assert sorted(r["id"] for r in good.collect()) == [1, 2, 3]
-        assert bad.count() == 2
-
-
 def test_zorder_layout_tightens_both_dimensions(spark, tmp_path):
     """The point of z-ordering: per-file bounding boxes shrink on BOTH
     clustering columns, so row-group stats prune filters on either.
@@ -308,21 +210,3 @@ def test_table_checksum_order_invariant_and_sensitive(spark, tables):
     )
     c = table_checksum(mutated, cols).first()
     assert c["checksum"] != a["checksum"] and c["n_rows"] == a["n_rows"]
-
-
-def test_observed_quarantine_audits_without_second_scan(spark, tmp_path):
-    """The Observation-attached audit counters materialize from the SAME
-    job that writes the good rows — values match the standalone stats
-    pass without re-reading the input."""
-    from pubsub_mapreduce_spark.sources.ingest import (
-        observed_quarantine,
-        read_jsonl,
-        split_quarantine,
-    )
-
-    p = tmp_path / "in.jsonl"
-    p.write_text('{"id": 1}\nboom\n{"id": 2}\n{"id": "x"}')
-    parsed, obs = observed_quarantine(read_jsonl(spark, str(p), "id long"))
-    good, _bad = split_quarantine(parsed)
-    good.write.format("noop").mode("overwrite").save()  # the real job
-    assert obs.get == {"n_lines": 4, "n_parsed": 2, "n_quarantined": 2}

@@ -404,28 +404,6 @@ def test_new_ops_degrade_gracefully_on_tiny_inputs(spark):
     assert SM.budget_allocation(empty_docs).count() == 0
 
 
-def test_csv_ingest_quarantines_poison_lines(spark, tmp_path):
-    from pubsub_mapreduce_spark.sources.ingest import (
-        read_csv,
-        split_quarantine,
-    )
-
-    p = tmp_path / "in.csv"
-    p.write_text(
-        "id,n,name\n"        # header: quarantines itself
-        "1,10,alpha\n"
-        "2,notanint,beta\n"  # poison: bad long
-        "3,30,gamma\n"
-        "\n"                  # blank: skipped entirely
-    )
-    df = read_csv(spark, str(p), "id long, n long, name string")
-    good, bad = split_quarantine(df)
-    assert sorted((r.id, r.n) for r in good.collect()) == [(1, 10), (3, 30)]
-    assert bad.count() == 2  # header + poison line
-    raws = {r._corrupt_record for r in bad.collect()}
-    assert "2,notanint,beta" in raws
-
-
 def test_kmeans_int8_partition_invariance_and_wcss_decrease(spark, tables):
     """Exact k-means: result identical under a different partitioning
     (integer arithmetic is order-free), and a second Lloyd round never

@@ -42,7 +42,7 @@ def knob_dir(spark, tmp_path_factory):
     return path
 
 
-def read_knob_stream(spark, path):
+def subscribe_knobs(spark, path):
     schema = "id long, n long, ts timestamp"
     return (
         spark.readStream.schema(schema)
@@ -82,7 +82,7 @@ def final_per_key(batches, key="id"):
 def test_lww_stream_matches_batch(spark, knob_dir):
     """T1 streaming (applyInPandasWithState) converges to the same
     latest-per-key answer as the batch max_by replay."""
-    stream = read_knob_stream(spark, knob_dir)
+    stream = subscribe_knobs(spark, knob_dir)
     batches, _ = run_foreach_batch(latest_per_key_stream(stream), None)
     assert len(batches) >= 4, "expected one micro-batch per input file"
     got = {k: (r["n"], r["ts"]) for k, r in final_per_key(batches).items()}
@@ -103,7 +103,7 @@ def test_lww_stream_matches_batch(spark, knob_dir):
 def test_windowed_count_stream_conserves(spark, knob_dir):
     """T4+T5 streaming: complete-mode windowed counts equal the batch
     groupBy — no rows lost or duplicated across micro-batches."""
-    stream = read_knob_stream(spark, knob_dir)
+    stream = subscribe_knobs(spark, knob_dir)
     counted = windowed_count_stream(stream, window="1 second")
     q = (
         counted.writeStream.outputMode("complete")
@@ -131,7 +131,7 @@ def test_windowed_count_stream_conserves(spark, knob_dir):
 def test_fan_out_stream_conserves(spark, knob_dir):
     """T2 -> T3 streaming: exploded row count == sum of quotas (the
     flood.go:75-81 conservation property), quota = floor(n * 0.2)."""
-    stream = read_knob_stream(spark, knob_dir)
+    stream = subscribe_knobs(spark, knob_dir)
     flood = snapshot_scale_stream(stream, delta=0.2)
     fanned = fan_out_stream(flood, n="quota")
     q = (
@@ -156,7 +156,7 @@ def test_running_total_and_rate_invariant(spark, knob_dir):
     running total ends at quota * ticks per knob. T7 runs in its
     row-count form on the raw fanned stream — stateful-after-aggregation
     needs a topic boundary (see running_total_stream docstring)."""
-    stream = read_knob_stream(spark, knob_dir)
+    stream = subscribe_knobs(spark, knob_dir)
     msgs = fan_out_stream(snapshot_scale_stream(stream, delta=0.2), n="quota")
     per_sec = rate_per_second_stream(msgs)
     totals = running_total_stream(msgs, cnt_col=None)
@@ -211,7 +211,7 @@ def test_two_stage_topology_through_topic(spark, tmp_path):
     )
     sentinel.coalesce(1).write.mode("append").parquet(src)
 
-    stream = read_knob_stream(spark, src)
+    stream = subscribe_knobs(spark, src)
     msgs = fan_out_stream(snapshot_scale_stream(stream, delta=0.2), n="quota")
     partials = windowed_count_stream(msgs, window="1 second", watermark="2 seconds")
     topic = FileTopic(str(tmp_path / "reducer_topic"))
@@ -254,7 +254,7 @@ def test_watermark_protects_closed_windows(spark, tmp_path):
         df.coalesce(1).write.mode("append").parquet(src)
         _time.sleep(1.1)
 
-    stream = read_knob_stream(spark, src)
+    stream = subscribe_knobs(spark, src)
     counted = windowed_count_stream(stream, window="1 second", watermark="2 seconds")
     topic = FileTopic(str(tmp_path / "late_out"))
     q = topic.publish_stream(counted, checkpoint=str(tmp_path / "ckpt_late"))
@@ -305,7 +305,7 @@ def _run_count(spark, src, count, window, watermark, mode):
     """(batch_id, sorted rows) per batch and numRowsDroppedByWatermark
     per batch of one availableNow run of ``count`` over ``src``."""
     batches, q = run_foreach_batch(
-        count(read_knob_stream(spark, src), window, watermark), None, mode
+        count(subscribe_knobs(spark, src), window, watermark), None, mode
     )
     dropped = {
         p["batchId"]: p["stateOperators"][0]["numRowsDroppedByWatermark"]
@@ -323,7 +323,7 @@ def test_windowed_count_stream_keys_partial_aggregate_on_primitives(
     src = str(tmp_path / "src")
     _write_tick_files(spark, src, [0, 50, 150])
     batches, q = run_foreach_batch(
-        windowed_count_stream(read_knob_stream(spark, src)), None
+        windowed_count_stream(subscribe_knobs(spark, src)), None
     )
     got = sorted(
         (round(r["window_start"].timestamp() * 1000) - T0_MS, r["id"], r["cnt"])
@@ -454,7 +454,7 @@ def test_session_window_stream_matches_batch(spark, knob_dir):
     (the same session_window operator as the batch user_sessions): the
     streamed complete-mode result equals the batch groupBy."""
     gap = "1 second"
-    stream = read_knob_stream(spark, knob_dir)
+    stream = subscribe_knobs(spark, knob_dir)
     sessions = (
         stream.groupBy(F.session_window("ts", gap).alias("w"), "id")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -498,7 +498,7 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     first.coalesce(1).write.mode("append").parquet(src)
 
     def run_once():
-        stream = read_knob_stream(spark, src)
+        stream = subscribe_knobs(spark, src)
         counted = windowed_count_stream(stream, window="1 second")
         q = (
             counted.writeStream.outputMode("update")
@@ -540,7 +540,7 @@ def test_streaming_throughput_exceeds_local_baseline(spark, tmp_path):
     # 200 ticks x 5 knobs x quota 1000 = 1,000,000 messages after fan-out
     knob_batch(spark, n=5000, ticks=200, tick_ms=200).coalesce(4).write.parquet(src)
 
-    stream = read_knob_stream(spark, src)
+    stream = subscribe_knobs(spark, src)
     msgs = fan_out_stream(snapshot_scale_stream(stream, delta=0.2), n="quota")
     per_sec = windowed_count_stream(msgs, window="1 second")
     t0 = _time.perf_counter()
@@ -621,7 +621,7 @@ def test_end_to_end_latency_publish_to_sink(spark, tmp_path):
         if bdf.count() > 0:
             arrivals.append(time.monotonic())
 
-    stream = read_knob_stream(spark, src)
+    stream = subscribe_knobs(spark, src)
     counted = windowed_count_stream(stream, window="1 second")
     q = (
         counted.writeStream.outputMode("update")
@@ -703,7 +703,7 @@ def test_checkpoint_file_manager_is_filesystem_api_and_keeps_checksums(spark, tm
     ckpt = str(tmp_path / "ckpt")
     knob_batch(spark, n=10, ticks=5, tick_ms=200).coalesce(1).write.parquet(src)
     counted = windowed_count_stream(
-        read_knob_stream(spark, src), window="100 milliseconds"
+        subscribe_knobs(spark, src), window="100 milliseconds"
     )
     q = (
         counted.writeStream.outputMode("update")
@@ -901,185 +901,3 @@ def test_streaks_batch_gaps_and_islands_semantics(spark):
     )
     got = {r["user_id"]: r["streak"] for r in streaks_batch(df).collect()}
     assert got == {1: 2, 2: 3, 3: 1}
-
-
-def test_session_timer_stream_equals_batch(spark, tmp_path):
-    """Event-time TIMERS (transformWithState): gap-timeout sessionizer
-    — intra-batch gaps emit immediately, the trailing open session per
-    user closes from handleExpiredTimer when the watermark (pushed by a
-    far-future sentinel) passes last+gap. Full closed-session set must
-    equal the batch lag/gap-sum twin."""
-    import datetime
-
-    from pubsub_mapreduce_spark.compat import ensure_protobuf
-
-    ensure_protobuf()
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState needs protobuf; no wheel and no "
-        "Cloud-SDK copy in this container",
-    )
-    from pubsub_mapreduce_spark.streaming.session_timer_maintain import (
-        sessions_batch,
-        sessions_stream,
-    )
-
-    base = datetime.datetime(2024, 5, 1)
-    m = datetime.timedelta(minutes=1)
-    schema = "event_id long, user_id long, ts timestamp"
-    rows, eid = [], 0
-    # user 1: sessions of 3, 2, 1 events; user 2: three singletons
-    for u, mins in {1: [0, 10, 20, 120, 125, 300], 2: [0, 60, 120]}.items():
-        for mm in mins:
-            rows.append((eid, u, base + mm * m))
-            eid += 1
-    rows.sort(key=lambda r: r[2])
-    d = tmp_path / "sess"
-    d.mkdir()
-    d3 = (len(rows) + 2) // 3
-    for i in range(3):
-        chunk = rows[i * d3 : (i + 1) * d3]
-        if i == 2:
-            # sentinel pushes the final watermark past every close
-            chunk = chunk + [
-                (9999, 999, base + datetime.timedelta(days=10))
-            ]
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
-            str(d / f"f{i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d) + "/f*")
-    )
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            sessions_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "sess_out"))
-            .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180)
-        q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-    import pyspark.sql.functions as SF
-
-    emitted = spark.read.parquet(str(tmp_path / "sess_out")).where(
-        SF.col("user_id") != 999
-    )
-    got = sorted(tuple(r) for r in emitted.collect())
-    df = spark.createDataFrame(rows, schema)
-    want = sorted(tuple(r) for r in sessions_batch(df).collect())
-    assert got == want and len(want) == 6
-    # session shape spot-checks: user 1 has a 3-event, a 2-event and a
-    # trailing 1-event session (the trailing one ONLY a timer can close)
-    by_user = {}
-    for u, s, e, n in want:
-        by_user.setdefault(u, []).append(n)
-    assert sorted(by_user[1]) == [1, 2, 3]
-    assert by_user[2] == [1, 1, 1]
-
-
-def test_session_timer_processor_transitions_direct():
-    """Direct execution of SessionTimerProcessor against fake state and
-    timer handles: intra-batch gap emits immediately; the re-armed
-    timer tracks the latest close boundary; a stale timer (expiry
-    before last+gap) does NOT close a live session; the true-boundary
-    expiry emits and clears."""
-    import pandas as pd
-
-    from pubsub_mapreduce_spark.streaming.session_timer_maintain import (
-        GAP_MS,
-        SessionTimerProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def clear(self):
-            self._v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.timers = []
-
-        def listTimers(self):
-            return iter(list(self.timers))
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    class FakeExpiry:
-        def __init__(self, t):
-            self._t = t
-
-        def getExpiryTimeInMs(self):
-            return self._t
-
-    p = SessionTimerProcessor()
-    p._handle, p._state = FakeHandle(), FakeValueState()
-
-    def feed(ts_ms):
-        return [
-            tuple(int(x) for x in df.iloc[0][["start_ms", "end_ms", "n_events"]])
-            for df in p.handleInputRows(
-                (7,), iter([pd.DataFrame({"ts_ms": ts_ms})]), None
-            )
-        ]
-
-    t0 = 1_000_000
-    # one batch containing an intra-batch gap: first session emits NOW
-    out = feed([t0, t0 + 60_000, t0 + GAP_MS + 120_000])
-    assert out == [(t0, t0 + 60_000, 2)]
-    assert p._handle.timers == [t0 + GAP_MS + 120_000 + GAP_MS]
-    # stale expiry (before last+gap) must not close the live session
-    assert list(
-        p.handleExpiredTimer((7,), None, FakeExpiry(t0 + GAP_MS))
-    ) == []
-    assert p._state.exists()
-    # true boundary closes and clears
-    fired = list(
-        p.handleExpiredTimer(
-            (7,), None, FakeExpiry(t0 + GAP_MS + 120_000 + GAP_MS)
-        )
-    )
-    assert len(fired) == 1
-    r = fired[0].iloc[0]
-    assert (int(r["start_ms"]), int(r["end_ms"]), int(r["n_events"])) == (
-        t0 + GAP_MS + 120_000,
-        t0 + GAP_MS + 120_000,
-        1,
-    )
-    assert not p._state.exists()
